@@ -415,7 +415,8 @@ def ngram_jaccard_pairs(
     J = 1.0 exactly — x/x — so output is identical to pairing the raw
     corpus). Real corpora are exact-dup-heavy, and without the
     collapse the candidate space grows QUADRATICALLY in copies: the
-    10× scale probe (tools/scale_probe.py, every text ×10) measured
+    10× scale probe (SCALE_PROBE.json; script: git show
+    7e22a3f:tools/scale_probe.py; every text ×10) measured
     graph_components at 29× wall time before this fix because dup
     groups of 10 contribute 45 pairs each."""
     d, members, near_groups = ngram_jaccard_groups(

@@ -249,11 +249,10 @@ def fit(
     shift drops below tol. None (default) preserves exact
     fixed-iteration reference semantics; all oracles use None.
 
-    r12 (guide §2.6 — fewer actions): the dimension used to be probed
-    with its own ``first()`` job; it is already carried by the init
-    centroids (the same data's vectors), so every fit consumer saves
-    one driver round-trip. The empty-input ValueError contract is
-    kept (an empty init collect raises it)."""
+    The dimension comes from the init centroids rather than a probe
+    job. Empty points raise ``ValueError``: via the empty init collect,
+    or, for an explicit ``init``, via the first iteration's empty
+    partials."""
     pts = points.select(id_col, vec_col)
     pts.persist()
     try:
@@ -264,6 +263,8 @@ def fit(
         ids = [cid for cid, _ in cents]
         for _ in range(n_iter):
             partials = _partial_sums_df(pts, [v for _, v in cents], vec_col).collect()
+            if not partials:
+                raise ValueError("empty points input")
             sums: dict[int, list] = {}
             for r in partials:
                 acc = sums.setdefault(r["cid"], [0] + [0.0] * dim)

@@ -373,7 +373,7 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     from broadcasting the small side at test scale, which would hide
     the property being demonstrated. Result is bucketing-independent,
     hence the plain-SQL oracle."""
-    from ..plans.relational import _scratch_dir
+    from ..session import scratch_dir
 
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
@@ -386,7 +386,7 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 df.write.bucketBy(8, key)
                 .sortBy(key)
-                .option("path", _scratch_dir(tbl))
+                .option("path", scratch_dir(tbl))
                 .mode("overwrite")
                 .saveAsTable(tbl)
             )
@@ -2172,7 +2172,8 @@ def graph_label_propagation(
         .distinct()
     )
     # SERIALIZED checkpoint blocks (r11): the scaled-key 100× kcore
-    # probe (90M distinct edges, tools/scale_probe_r11.py) OOM'd a 48g
+    # probe (90M distinct edges; SCALE_PROBE.json graph_kcore_scaledkeys,
+    # script: git show 7e22a3f:tools/scale_probe_r11.py) OOM'd a 48g
     # heap when the 2|E| edge relation checkpointed as deserialized
     # row objects; pyspark's MEMORY_AND_DISK is serialized+spillable
     # (~10× smaller) and still cuts lineage so no round re-derives
@@ -3278,16 +3279,10 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-grain merge) decomposed through foreachBatch exactly like
     streaming_minhash_dedup (plans/llm.py)."""
     import os
-    import shutil
-    import tempfile
     import time as _time
 
-    from ..session import (
-        PHASE_WALLS,
-        ensure_conf,
-        protect_scratch,
-        prune_scratch,
-    )
+    from ..session import PHASE_WALLS, ensure_conf, scratch_dir
+    from ..streaming.jobs import stage_arrivals
 
     ensure_conf(spark)
     _t_scaffold = _time.time()
@@ -3295,44 +3290,18 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", F.col("l_extendedprice").cast("double").alias("x")
     )
     schema = li.schema
-    base = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    root = tempfile.mkdtemp(prefix="dds_stream_", dir=base)
-    protect_scratch(root)
+    root = scratch_dir("dds_stream")
     landing = os.path.join(root, "landing")
     ledger = os.path.join(root, "ledger")
     ckpt = os.path.join(root, "ckpt")
-    os.makedirs(landing, exist_ok=True)
-    # three arrival shards in ONE corpus pass (the streaming_minhash_dedup
-    # scaffold shape: range-repartition puts each shard in exactly one
-    # task -> one part file per shard dir, renamed with increasing mtimes
-    # so maxFilesPerTrigger=1 drains them as ordered micro-batches)
-    tmp = os.path.join(root, "shard_build")
-    (
-        li.withColumn("shard", F.pmod(F.col("l_orderkey"), F.lit(3)))
-        .repartitionByRange(3, "shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(tmp)
+    # three ordered arrival shards, so maxFilesPerTrigger=1 drains them
+    # as three micro-batches
+    stage_arrivals(
+        li.withColumn("shard", F.pmod(F.col("l_orderkey"), F.lit(3))),
+        "shard",
+        3,
+        landing,
     )
-    for s in range(3):
-        sdir = os.path.join(tmp, f"shard={s}")
-        parts = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
-        if len(parts) != 1:
-            raise RuntimeError(
-                f"streaming_quantile_sketch: shard {s} wrote {len(parts)} "
-                "part files; expected exactly 1"
-            )
-        dst = os.path.join(landing, f"shard{s}.parquet")
-        os.replace(os.path.join(sdir, parts[0]), dst)
-        os.utime(dst, (1_000_000_000.0 + s * 100, 1_000_000_000.0 + s * 100))
-    shutil.rmtree(tmp)
     _t_drain = _time.time()
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -3464,7 +3433,8 @@ def graph_kcore(
         .distinct()
     )
     # SERIALIZED checkpoint blocks (r11): the scaled-key 100× kcore
-    # probe (90M distinct edges, tools/scale_probe_r11.py) OOM'd a 48g
+    # probe (90M distinct edges; SCALE_PROBE.json graph_kcore_scaledkeys,
+    # script: git show 7e22a3f:tools/scale_probe_r11.py) OOM'd a 48g
     # heap when the 2|E| edge relation checkpointed as deserialized
     # row objects; pyspark's MEMORY_AND_DISK is serialized+spillable
     # (~10× smaller) and still cuts lineage so no round re-derives

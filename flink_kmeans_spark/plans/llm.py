@@ -15,6 +15,7 @@ from ..operators import dedup as DD
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..operators import udfs as U
+from ..session import index_dir
 from ..sources import load_table, spread_scan
 from .registry import register
 
@@ -1765,8 +1766,7 @@ def _gc_stale_index_tags(
     import shutil
     import time
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    idx_root = os.path.join(repo_root, ".index")
+    idx_root = os.path.dirname(index_dir(keep_tbl))
 
     def stale(name: str) -> bool:
         if not (
@@ -1938,14 +1938,10 @@ def _ann_index_ensure(spark: SparkSession, sf_dir: str) -> str:
         spark, "ann_index_", tbl,
         match=lambda name: name.count("_") == 2,  # ann_index_<tag> only
     )
-    # The index lives OUTSIDE .scratch on purpose: every _scratch_dir()
-    # call GCs .scratch subdirs older than 2h, which would delete the
-    # index files underneath a still-live catalog entry (tableExists
-    # would then short-circuit the rebuild and probes would read a
-    # missing path). .index/ is never pruned; trust the catalog only
-    # when the path still holds data files.
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    idx_path = os.path.join(repo_root, ".index", tbl)
+    # The index outlives this call, so it lives in the never-pruned
+    # index dir; trust the catalog only when that path still holds
+    # data files.
+    idx_path = index_dir(tbl)
     have_files = os.path.isdir(idx_path) and any(
         f.endswith(".parquet") for f in os.listdir(idx_path)
     )
@@ -1959,7 +1955,7 @@ def _ann_index_ensure(spark: SparkSession, sf_dir: str) -> str:
             .head()
         )
         loc = loc_row["data_type"] if loc_row is not None else ""
-        if not have_files or not loc.rstrip("/").endswith(f".index/{tbl}"):
+        if not have_files or not loc.rstrip("/").endswith(idx_path):
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     if not spark.catalog.tableExists(tbl):
         os.makedirs(idx_path, exist_ok=True)
@@ -3777,8 +3773,7 @@ def sim_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # processes' leftovers age out via the same GC below.
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8] + f"_{os.getpid()}"
     tbl = f"ann_inc_{tag}"
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    idx_path = os.path.join(repo_root, ".index", tbl)
+    idx_path = index_dir(tbl)
     # This key rebuilds per call, so other sf_dirs'/processes' ann_inc_*
     # leftovers are pure leak (one per probe-replica path otherwise) —
     # GC them; results are localCheckpoint'ed, so no live handle reads
@@ -4256,8 +4251,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (same hardening as sim_ann_incremental; GC ages out leftovers)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8] + f"_{os.getpid()}"
     tbl = f"mh_inc_{tag}"
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    idx_path = os.path.join(repo_root, ".index", tbl)
+    idx_path = index_dir(tbl)
     _gc_stale_index_tags(spark, "mh_inc_", tbl, min_age_s=3600)
     _mh_inc_build(
         spark, banded_of(base_g, "base"), banded_of(delta_g, "delta"), tbl, idx_path
@@ -4422,9 +4416,7 @@ def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8] + f"_{os.getpid()}"
     tbl, tblc = f"mh_cmpsrc_{tag}", f"mh_cmp_{tag}"
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    idx = os.path.join(repo_root, ".index", tbl)
-    idxc = os.path.join(repo_root, ".index", tblc)
+    idx, idxc = index_dir(tbl), index_dir(tblc)
     _gc_stale_index_tags(spark, "mh_cmpsrc_", tbl, min_age_s=3600)
     _gc_stale_index_tags(spark, "mh_cmp_", tblc, min_age_s=3600)
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -4694,18 +4686,13 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     file stream is the lakehouse serving pattern; swapping in a Kafka
     source changes one line of the reader."""
     import os
-    import tempfile
     import time as _time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..session import (
-        PHASE_WALLS,
-        ensure_conf,
-        protect_scratch,
-        prune_scratch,
-    )
+    from ..session import PHASE_WALLS, ensure_conf, scratch_dir
+    from ..streaming.jobs import land
 
     ensure_conf(spark)
     _t_scaffold = _time.time()
@@ -4717,17 +4704,12 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx.orderBy("vec_id").limit(10).select("vec_id", "bucket").collect(),
         key=lambda r: r["vec_id"],
     )
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    root = tempfile.mkdtemp(prefix="ann_probe_stream_", dir=base)
-    protect_scratch(root)  # returned frame lazily reads root/result
+    root = scratch_dir("ann_probe_stream")
     landing, ckpt = f"{root}/landing", f"{root}/ckpt"
     out = f"{root}/result"
-    os.makedirs(landing, exist_ok=True)
+    os.makedirs(landing)
+    # the two 5-query arrivals are driver-side rows: writing them with
+    # pyarrow costs no Spark job
     for i, (name, rows) in enumerate(
         (("qa.parquet", qrows[:5]), ("qb.parquet", qrows[5:]))
     ):
@@ -4739,7 +4721,7 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         path = os.path.join(landing, name)
         pq.write_table(t, path)
-        os.utime(path, (1_000_000_000.0 + i * 100, 1_000_000_000.0 + i * 100))
+        land(path, i)
 
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.collect()  # ≤ 5 queries per arriving batch
@@ -4955,64 +4937,28 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one query — the foreachBatch ledger IS the idiomatic
     decomposition."""
     import os
-    import shutil
-    import tempfile
     import time as _time
 
     from ..operators.dedup import minhash_signatures
-    from ..session import (
-        PHASE_WALLS,
-        ensure_conf,
-        protect_scratch,
-        prune_scratch,
-    )
+    from ..session import PHASE_WALLS, ensure_conf, scratch_dir
+    from ..streaming.jobs import stage_arrivals
 
     ensure_conf(spark)
     _t_scaffold = _time.time()
     docs_static = _docs(spark, sf_dir)
     schema = docs_static.schema
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    root = tempfile.mkdtemp(prefix="mh_stream_", dir=base)
-    protect_scratch(root)
+    root = scratch_dir("mh_stream")
     landing = os.path.join(root, "landing")
     ledger = os.path.join(root, "ledger")
     ckpt = os.path.join(root, "ckpt")
-    os.makedirs(landing, exist_ok=True)
-    # three arrival shards, written executor-side in ONE corpus pass
-    # (partitionBy over a range-repartition puts each shard value in
-    # exactly one task → exactly one part file per shard dir), then
-    # renamed into the landing dir as single files with strictly
-    # increasing mtimes so maxFilesPerTrigger=1 drains them as three
-    # ordered micro-batches (the previous per-shard filter+coalesce(1)
-    # loop scanned the corpus three times)
-    tmp = os.path.join(root, "shard_build")
-    (
-        docs_static.withColumn("shard", F.pmod(F.col("doc_id"), F.lit(3)))
-        .repartitionByRange(3, "shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(tmp)
+    # three doc_id-sharded arrivals, so maxFilesPerTrigger=1 drains them
+    # as three ordered micro-batches
+    stage_arrivals(
+        docs_static.withColumn("shard", F.pmod(F.col("doc_id"), F.lit(3))),
+        "shard",
+        3,
+        landing,
     )
-    for s in range(3):
-        sdir = os.path.join(tmp, f"shard={s}")
-        parts = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
-        if len(parts) != 1:
-            # range sampling put two shard values in one task (possible
-            # in principle on tiny inputs) — a lost part file would be a
-            # silent wrong answer, so fail loudly; callers retry
-            raise RuntimeError(
-                f"streaming_minhash_dedup: shard {s} wrote {len(parts)} "
-                "part files; expected exactly 1"
-            )
-        dst = os.path.join(landing, f"shard{s}.parquet")
-        os.replace(os.path.join(sdir, parts[0]), dst)
-        os.utime(dst, (1_000_000_000.0 + s * 100, 1_000_000_000.0 + s * 100))
-    shutil.rmtree(tmp)
     _t_drain = _time.time()
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -6635,8 +6581,7 @@ def dedup_cdc_incremental(
     base = ch.filter(F.col("doc_id") % 3 != 0).select("digest").distinct()
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8] + f"_{os.getpid()}"
     tbl = f"cdc_inc_{tag}"
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    idx_path = os.path.join(repo_root, ".index", tbl)
+    idx_path = index_dir(tbl)
     _gc_stale_index_tags(spark, "cdc_inc_", tbl, min_age_s=3600)
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     import shutil

@@ -20,26 +20,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.joins import asof_join_backward
+from ..session import scratch_dir
 from ..sources import load_table
 from .registry import register
 
 
 def _t(spark, sf_dir, name):
     return load_table(spark, sf_dir, name)
-
-
-def _scratch_dir(name: str) -> str:
-    """Sink scratch space INSIDE the repo (gitignored) — the build
-    environment forbids writes outside /root/repo."""
-    import os
-    import tempfile
-
-    from ..session import prune_scratch
-
-    base = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    return tempfile.mkdtemp(prefix=f"{name}_", dir=base)
 
 
 # ---------------------------------------------------------------- scans
@@ -100,7 +87,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orderpriority (5 values) → 5 directories; at scale this is what
     enables partition pruning for downstream readers. The oracle runs
     on the ORIGINAL table — the roundtrip must be lossless."""
-    out = _scratch_dir("sink_parquet") + "/orders"
+    out = scratch_dir("sink_parquet") + "/orders"
     o = _t(spark, sf_dir, "orders")
     o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
     back = spark.read.parquet(out)
@@ -120,7 +107,7 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 reference-parity CSV sink (writeAsCsv) + read-back through the
     schema'd CSV source — roundtrip must be lossless. Parquet is the
     engine-native format; CSV exists for reference CLI compatibility."""
-    out = _scratch_dir("sink_csv") + "/customer"
+    out = scratch_dir("sink_csv") + "/customer"
     c = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 500.0).select(
         "c_custkey", "c_name", "c_acctbal"
     )
@@ -1313,7 +1300,7 @@ def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     (schema inference is a full extra pass over the data at 100 TB —
     never rely on it). Jackson round-trips doubles losslessly, so the
     oracle is the plain parquet-side projection."""
-    out = _scratch_dir("scan_json") + "/events"
+    out = scratch_dir("scan_json") + "/events"
     ev = (
         _t(spark, sf_dir, "events")
         .filter(F.col("event_id") < 2000)
@@ -2262,7 +2249,7 @@ def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushdown, vectorized reader), so format choice is a
     storage decision, not a query-plan decision — the oracle runs on
     the Parquet original and must hash-match the ORC roundtrip."""
-    out = _scratch_dir("scan_orc") + "/orders"
+    out = scratch_dir("scan_orc") + "/orders"
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"
     )
@@ -2298,7 +2285,7 @@ def sink_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     are never opened. THE table-layout decision at 100 TB: a
     date-partitioned fact table turns every time-bounded query into a
     fraction-of-the-lake scan."""
-    out = _scratch_dir("sink_ppr") + "/orders_by_year"
+    out = scratch_dir("sink_ppr") + "/orders_by_year"
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -2468,7 +2455,7 @@ def join_dynamic_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold (broadcast 1-row max frame) silently defeats DPP —
     probed both shapes; only the literal form injects the pruning
     subquery."""
-    out = _scratch_dir("join_dpp")
+    out = scratch_dir("join_dpp")
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -2557,7 +2544,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew possible); the audits are 1-row aggregates whose file counts
     come from distinct input_file_name(), not a filesystem listing —
     the check itself is distributed."""
-    out = _scratch_dir("compaction")
+    out = scratch_dir("compaction")
     o = _t(spark, sf_dir, "orders").select("o_orderkey")
     frag_dir = out + "/fragmented"
     o.repartition(64).write.mode("overwrite").parquet(frag_dir)

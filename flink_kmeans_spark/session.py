@@ -95,42 +95,61 @@ def get_spark(app_name: str = "flink-kmeans-spark", shuffle_partitions: int | No
     return builder.getOrCreate()
 
 
-# Scratch dirs the LIVE process still holds lazy DataFrame handles over
-# (e.g. run_available_now returns spark.read.parquet over a staged sink).
-# prune_scratch never deletes these, however old they get — a handle
-# returned early in a long session must not start failing mid-session
-# because a later call GC'd its files (ADVICE r7).
+# Engine state lives inside the repo (gitignored): ``.scratch/`` holds
+# per-call dirs, ``.index/`` holds persistent bucketed tables.
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SCRATCH_ROOT = os.path.join(_REPO_ROOT, ".scratch")
+_INDEX_ROOT = os.path.join(_REPO_ROOT, ".index")
+
+# Scratch dirs this process still holds lazy DataFrame handles over.
+# Pruning never deletes these, however old they get, so a handle
+# returned early in a long session keeps its files.
 _LIVE_SCRATCH: set = set()
 
-# Per-key phase walls for the streaming operators (VERDICT r8 item 3):
-# the landing-dir build is TEST SCAFFOLDING (single-task coalesced
-# writes that simulate file arrival) while the drain is the operator
-# under measurement. Each streaming key records
-# {"scaffold_s": ..., "drain_s": ...} here on every run so the scale
-# probe can grade the drain ratio separately from the plumbing.
+# Per-key phase walls for the streaming operators: the landing-dir build
+# is test scaffolding (writes that simulate file arrival) while the
+# drain is the operator under measurement. Each streaming key records
+# {"scaffold_s": ..., "drain_s": ...} here on every run so the two can
+# be measured separately.
 PHASE_WALLS: dict = {}
 
 
-def protect_scratch(path: str) -> None:
-    """Mark a .scratch subdir as referenced by a live returned handle."""
-    _LIVE_SCRATCH.add(os.path.abspath(path))
+def scratch_dir(prefix: str) -> str:
+    """Create a fresh per-call dir ``.scratch/<prefix>_<random>``.
+
+    Each call first prunes sibling dirs older than 2 h, so repeated runs
+    don't accumulate spill. The new dir is exempt from that pruning for
+    the life of this process, because every caller returns a lazy frame
+    that still reads it."""
+    import tempfile
+
+    os.makedirs(_SCRATCH_ROOT, exist_ok=True)
+    _prune_scratch()
+    path = tempfile.mkdtemp(prefix=f"{prefix}_", dir=_SCRATCH_ROOT)
+    _LIVE_SCRATCH.add(path)
+    return path
 
 
-def prune_scratch(base: str, max_age_s: int = 7200) -> None:
-    """Best-effort GC for .scratch temp dirs (sinks, stream checkpoints):
-    every creation call prunes siblings older than ``max_age_s`` so
-    repeated gate/bench runs don't accumulate unbounded spill. Errors
-    are swallowed — a concurrent run may own a dir we try to delete.
-    Dirs registered via :func:`protect_scratch` (this process still
-    holds lazy handles over them) are never pruned."""
+def index_dir(tbl: str) -> str:
+    """Location of the persistent bucketed table ``tbl``: ``.index/<tbl>``.
+
+    Index dirs are never pruned (a catalog entry may outlive any one
+    call); callers GC superseded ones by their fingerprint tag."""
+    return os.path.join(_INDEX_ROOT, tbl)
+
+
+def _prune_scratch() -> None:
+    """Best-effort GC of scratch dirs older than 2 h, skipping the
+    ones this process handed out. Errors are swallowed: a
+    concurrent run may own a dir we try to delete."""
     import shutil
     import time
 
     try:
-        cutoff = time.time() - max_age_s
-        for name in os.listdir(base):
-            p = os.path.join(base, name)
-            if os.path.abspath(p) in _LIVE_SCRATCH:
+        cutoff = time.time() - 7200
+        for name in os.listdir(_SCRATCH_ROOT):
+            p = os.path.join(_SCRATCH_ROOT, name)
+            if p in _LIVE_SCRATCH:
                 continue
             try:
                 if os.path.isdir(p) and os.path.getmtime(p) < cutoff:

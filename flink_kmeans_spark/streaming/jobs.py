@@ -17,7 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import ensure_conf
+import os
+
+from ..session import ensure_conf, scratch_dir
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -40,8 +42,6 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     would route object-store directory tables into the glob branch and
     silently stream zero rows (ADVICE r6). Local-path fallback only if
     the JVM call is unavailable."""
-    import os
-
     schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
     p = f"{sf_dir}/{name}.parquet"
     try:
@@ -251,6 +251,50 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def land(path: str, i: int) -> None:
+    """Stamp ``path`` as arrival ``i``. With ``latestFirst=false`` the
+    file source drains files oldest-mtime first, so strictly increasing
+    synthetic mtimes fix the micro-batch order."""
+    t = 1_000_000_000.0 + 100 * i
+    os.utime(path, (t, t))
+
+
+def stage_arrivals(df: DataFrame, col: str, n: int, dest: str) -> list[str]:
+    """Write ``df`` as ``n`` arrival files ``dest/<col><i>.parquet``,
+    one per value ``i`` in ``0..n-1`` of the integer column ``col``, in
+    ONE pass over ``df``, and return the landed paths in arrival order.
+
+    Range-repartitioning on ``col`` typically puts each value in its
+    own task, so ``partitionBy`` writes one part file per value; the
+    guard below enforces that, because a second part file would not be
+    landed and its rows would silently go missing. An arrival with no
+    rows lands no file. ``col`` itself is not stored in the files."""
+    import shutil
+
+    build = dest.rstrip("/") + "_build"
+    df.repartitionByRange(n, col).write.mode("overwrite").partitionBy(col).parquet(
+        build
+    )
+    os.makedirs(dest, exist_ok=True)
+    landed = []
+    for i in range(n):
+        sdir = os.path.join(build, f"{col}={i}")
+        if not os.path.isdir(sdir):
+            continue
+        parts = [f for f in os.listdir(sdir) if f.endswith(".parquet")]
+        if len(parts) != 1:
+            raise RuntimeError(
+                f"stage_arrivals: {col}={i} wrote {len(parts)} part files; "
+                "expected exactly 1"
+            )
+        path = os.path.join(dest, f"{col}{i}.parquet")
+        os.replace(os.path.join(sdir, parts[0]), path)
+        land(path, i)
+        landed.append(path)
+    shutil.rmtree(build)
+    return landed
+
+
 def streaming_late_data_stream(spark: SparkSession) -> DataFrame:
     """Watermark LATE-DATA semantics, made observable: a two-file
     landing directory processed one file per micro-batch
@@ -271,35 +315,25 @@ def streaming_late_data_stream(spark: SparkSession) -> DataFrame:
     makes event-time aggregation feasible on an unbounded 100 TB/day
     stream. The 02:00 window never emits (watermark never passes it) —
     also part of the contract."""
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     ensure_conf(spark)
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "late_landing",
-    )
-    os.makedirs(base, exist_ok=True)
-
-    def _write(name: str, minutes: list, mtime: float) -> None:
-        us = [m * 60_000_000 for m in minutes]  # minutes past 2000-01-01 00:00 UTC
-        epoch = 946_684_800_000_000  # 2000-01-01 UTC in µs
+    base = scratch_dir("late_landing")
+    epoch = 946_684_800_000_000  # 2000-01-01 UTC in µs
+    for i, minutes in enumerate(([1, 2, 25, 55], [56], [3, 120])):
         tbl = pa.table(
             {
-                "ts": pa.array([epoch + u for u in us], pa.timestamp("us", tz="UTC")),
-                "event_id": pa.array(list(range(len(us))), pa.int64()),
+                "ts": pa.array(
+                    [epoch + m * 60_000_000 for m in minutes],
+                    pa.timestamp("us", tz="UTC"),
+                ),
+                "event_id": pa.array(list(range(len(minutes))), pa.int64()),
             }
         )
-        path = os.path.join(base, name)
+        path = os.path.join(base, f"batch{i + 1}.parquet")
         pq.write_table(tbl, path)
-        os.utime(path, (mtime, mtime))
-
-    _write("batch1.parquet", [1, 2, 25, 55], 1_000_000_000.0)
-    _write("batch2.parquet", [56], 1_000_000_100.0)  # filler: wm takes effect
-    _write("batch3.parquet", [3, 120], 1_000_000_200.0)  # 00:03 is LATE
+        land(path, i)
 
     stream = (
         spark.readStream.schema("ts timestamp, event_id long")
@@ -396,10 +430,9 @@ def run_available_now(
     skip_no_data_batch: bool = False,
 ) -> DataFrame:
     """Drain the stream with the availableNow trigger and return the
-    result as a DataFrame (test/driver harness helper). Checkpoints
-    live under the repo's .scratch (the build environment forbids
-    writes outside /root/repo). State runs on RocksDB (see
-    rocksdb_state).
+    result as a DataFrame (test/driver harness helper). The checkpoint
+    and the staged result live in one scratch dir. State runs on
+    RocksDB (see rocksdb_state).
 
     The result is staged to PARQUET from inside ``foreachBatch`` — an
     executor-side distributed write. The previous memory-sink harness
@@ -414,25 +447,9 @@ def run_available_now(
 
     ``timeout_sec`` can be overridden with $SPARK_GRAFT_STREAM_TIMEOUT
     (the 100× probe needs more than two minutes of drain)."""
-    import os
-    import tempfile
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    from ..session import protect_scratch, prune_scratch
-
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
     timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", timeout_sec))
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_", dir=base)
-    sink_root = tempfile.mkdtemp(prefix=f"sink_{name}_", dir=base)
-    out = sink_root + "/result"
-    # The returned DataFrame is a LAZY read over this sink — protect it
-    # from prune_scratch for the life of the process so a handle held
-    # across a long session never loses its files (ADVICE r7).
-    protect_scratch(sink_root)
+    root = scratch_dir(f"stream_{name}")
+    ckpt, out = f"{root}/ckpt", f"{root}/result"
     spark = df.sparkSession
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
@@ -499,21 +516,8 @@ def run_foreach_batch_upsert(
     second copy, so replays never double-apply. The returned frame is
     the post-drain merge: per-user totals + last-writer-wins latest
     value across batches."""
-    import os
-    import tempfile
-
-    from ..session import protect_scratch, prune_scratch
-
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    stage_root = tempfile.mkdtemp(prefix="fbu_stage_", dir=base)
-    stage = stage_root + "/partials"
-    protect_scratch(stage_root)  # returned frame lazily reads this dir
-    ckpt = tempfile.mkdtemp(prefix="fbu_ckpt_", dir=base)
+    root = scratch_dir("fbu")
+    stage, ckpt = f"{root}/partials", f"{root}/ckpt"
 
     ev = stream_events(spark, sf_dir)
 
@@ -566,56 +570,31 @@ def run_checkpoint_resume(
     so the sink holds every event exactly once (the crash/restart
     guarantee a 100 TB ingestion pipeline leans on; identity oracle
     over the source proves it)."""
-    import os
-    import tempfile
-
-    from ..session import protect_scratch, prune_scratch
     from ..sources.tables import _normalize_event_ts
 
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-    )
-    os.makedirs(base, exist_ok=True)
-    prune_scratch(base)
-    root = tempfile.mkdtemp(prefix="ckpt_resume_", dir=base)
-    protect_scratch(root)  # returned frame lazily reads root/sink
+    root = scratch_dir("ckpt_resume")
     landing, ckpt, sink = f"{root}/landing", f"{root}/ckpt", f"{root}/sink"
-    os.makedirs(landing, exist_ok=True)
+    os.makedirs(landing)
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     schema = ev.schema
-    # two deterministic arrivals (disjoint, exhaustive), built in ONE
-    # corpus pass (r12, guide §2.4 — the old per-arrival filter +
-    # coalesce(1) writes scanned events twice): partitionBy lands each
-    # arrival in its own directory with one file (repartitionByRange
-    # guarantees the two arrival values never share a task), and
-    # arrival 2 is STAGED outside the landing dir until drain 1 has
-    # completed — the resume semantics (drain 1 must not see arrival 2)
-    # are enforced by the os-level move, exactly as a real landing
-    # directory receives files.
-    stage_arrivals = f"{root}/arrivals_stage"
-    (
+    # two disjoint, exhaustive arrivals built in one corpus pass; each
+    # waits in a stage dir until the drain before it has completed, so
+    # drain 0 cannot see arrival 1 — the os-level move is how a real
+    # landing directory receives files
+    arrivals = stage_arrivals(
         ev.withColumn(
             "arrival",
-            F.when(F.col("event_id") % 2 == 0, F.lit(1)).otherwise(F.lit(2)),
-        )
-        .repartitionByRange(2, "arrival")
-        .write.mode("overwrite")
-        .partitionBy("arrival")
-        .parquet(stage_arrivals)
+            F.when(F.col("event_id") % 2 == 0, F.lit(0)).otherwise(F.lit(1)),
+        ),
+        "arrival",
+        2,
+        f"{root}/stage",
     )
-    os.replace(f"{stage_arrivals}/arrival=1", f"{landing}/arrival=1")
-    first = True
-    for arrival in (1, 2):
-        if not first:
-            os.replace(f"{stage_arrivals}/arrival=2", f"{landing}/arrival=2")
-        first = False
+    for path in arrivals:
+        os.replace(path, os.path.join(landing, os.path.basename(path)))
         stream = _normalize_event_ts(
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(landing)
+            spark.readStream.schema(schema).parquet(landing)
         )
         q = (
             stream.writeStream.format("parquet")
@@ -627,7 +606,9 @@ def run_checkpoint_resume(
         )
         if not q.awaitTermination(timeout_sec):
             q.stop()
-            raise TimeoutError(f"arrival {arrival} did not drain in {timeout_sec}s")
+            raise TimeoutError(
+                f"{os.path.basename(path)} did not drain in {timeout_sec}s"
+            )
         q.stop()
     return spark.read.parquet(sink).select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("value")

@@ -64,6 +64,16 @@ def test_fit_predict_matches_numpy(spark, points):
     assert (got["cid"].to_numpy() == exp_assign).all()
 
 
+@pytest.mark.parametrize("explicit_init", [False, True])
+def test_fit_empty_points_raises(spark, points, explicit_init):
+    """Empty input fails loudly whether or not the caller supplies
+    ``init``; an explicit init must not come back as a silent model."""
+    df, _, _ = points
+    init = km.init_centroids(df, K) if explicit_init else None
+    with pytest.raises(ValueError, match="empty points input"):
+        km.fit(df.limit(0), k=K, n_iter=2, init=init)
+
+
 def test_assign_arrow_equals_expression_assign(spark, points):
     """The Arrow bulk-scoring path must agree exactly with the
     oracle-verified expression path."""

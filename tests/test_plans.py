@@ -702,3 +702,24 @@ def test_text_containment_df_cap_is_bounded_window(spark, sf_dir):
         if "Exchange hashpartitioning(g#" in ln
     ]
     assert len(g_exchanges) == 1, g_exchanges
+
+
+def test_on_disk_state_has_one_owner():
+    """Only session.py may derive the repo root or name the .scratch and
+    .index dirs; every other module goes through scratch_dir/index_dir."""
+    import pathlib
+
+    import flink_kmeans_spark
+
+    pkg = pathlib.Path(flink_kmeans_spark.__file__).parent
+    owned = re.compile(
+        r"""["']\.(scratch|index)\b|dirname\((os\.path\.)?dirname\((os\.path\.)?dirname\("""
+    )
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "session.py" or path.parent != pkg
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if owned.search(line)
+    ]
+    assert offenders == []

@@ -105,6 +105,36 @@ def test_sink_parquet_roundtrip_lossless(spark, sf_dir):
     assert int(got["n"].sum()) == len(orig)
 
 
+def test_scratch_dir_survives_prune_while_held(spark, sf_dir):
+    """A dir handed out by ``scratch_dir`` must outlive a later call's
+    2 h prune, because the frame returned over it still reads it; a
+    dir this process does not hold is still pruned."""
+    import os
+    import tempfile
+    import time
+    from urllib.parse import urlparse
+
+    from conftest import SCRATCH_DIR
+    from flink_kmeans_spark.session import scratch_dir
+
+    held = scratch_dir("prune_held")
+    df = specs()["sink_parquet"].fn(spark, sf_dir)
+    n = df.count()
+    sink_file = urlparse(df.inputFiles()[0]).path
+    sink_root = os.path.join(
+        SCRATCH_DIR, os.path.relpath(sink_file, SCRATCH_DIR).split(os.sep)[0]
+    )
+    orphan = tempfile.mkdtemp(prefix="prune_orphan_", dir=SCRATCH_DIR)
+    aged = time.time() - 7300
+    for d in (held, sink_root, orphan):
+        os.utime(d, (aged, aged))
+    scratch_dir("prune_probe")
+    assert os.path.isdir(held)
+    assert os.path.isdir(sink_root)
+    assert not os.path.exists(orphan)
+    assert df.count() == n
+
+
 def test_agg_hll_sketch_tolerance(spark, sf_oracle_dir):
     """DataSketches HLL estimates (direct AND merged-up) within 5% of
     exact COUNT(DISTINCT) per returnflag."""

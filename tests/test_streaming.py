@@ -205,3 +205,43 @@ def test_streaming_quantile_sketch_ledger_equals_batch(spark, sf_dir):
     assert roots, "sketch stream left no scratch root"
     batches = glob.glob(os.path.join(roots[-1], "ledger", "batch=*"))
     assert len(batches) == 3
+
+
+def test_stage_arrivals_lands_present_arrivals_in_order(spark, tmp_path):
+    """An arrival value with no rows lands no file: the others still land
+    as ``<col><i>.parquet`` with strictly increasing mtimes, every row
+    lands exactly once, and the build dir is gone."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from flink_kmeans_spark.streaming.jobs import stage_arrivals
+
+    df = spark.range(40).withColumn(
+        "shard", F.when(F.col("id") % 2 == 0, F.lit(0)).otherwise(F.lit(2))
+    )
+    dest = str(tmp_path / "landing")
+    paths = stage_arrivals(df, "shard", 3, dest)
+    assert paths == [f"{dest}/shard0.parquet", f"{dest}/shard2.parquet"]
+    mtimes = [os.path.getmtime(p) for p in paths]
+    assert mtimes[0] < mtimes[1]
+    ids = [sorted(r["id"] for r in spark.read.parquet(p).collect()) for p in paths]
+    assert ids == [list(range(0, 40, 2)), list(range(1, 40, 2))]
+    assert sorted(os.listdir(tmp_path)) == ["landing"]
+
+
+def test_streaming_checkpoint_resume_exactly_once(spark, sf_dir):
+    """The sink holds every source event exactly once, and it took two
+    drains (two committed sink batches) to get there."""
+    import glob
+    import os
+
+    got = specs()["streaming_checkpoint_resume"].fn(spark, sf_dir).toPandas()
+    src = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id").toPandas()
+    assert got["event_id"].is_unique
+    assert sorted(got["event_id"]) == sorted(src["event_id"])
+    root = max(
+        glob.glob(os.path.join(SCRATCH_DIR, "ckpt_resume_*")), key=os.path.getmtime
+    )
+    log = os.path.join(root, "sink", "_spark_metadata")
+    assert sorted(f for f in os.listdir(log) if f.isdigit()) == ["0", "1"]
