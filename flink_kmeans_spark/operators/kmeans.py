@@ -11,15 +11,18 @@ Flink batch clustering example):
 - final assignment → ``(clusterId, point)``                   → :func:`predict`
 
 Scale design (SURVEY.md §4.3): the centroid set is k×d doubles, so it
-travels as a *plan literal* (``centroids_literal``) rather than a join
-side — the assign step is a pure narrow map over the points (no
-shuffle, no cross join). Each iteration then needs exactly ONE shuffle:
-the partial-aggregated ``groupBy(cid)`` of per-dimension sums, which
-moves k×(d+1) doubles per map partition regardless of data size. The
-driver collects k rows per iteration (the only collect anywhere). This
-is the same execution shape MLlib's own KMeans uses, and it is the
-shape that survives 100 TB: per-iteration network traffic is
-O(partitions × k × d), independent of row count.
+never travels as a join side of the points. :func:`fit` runs each
+iteration as one ``mapInArrow`` job over the cached points
+(:func:`_partial_sums_df`): every Arrow batch is decoded to a numpy
+block without pandas (:func:`arrow_vectors`), scored against the
+centroids (:func:`_nearest`) and folded to ≤k rows of (cid, n, Σvec);
+the driver collects those partials and finishes the tiny reduce. There
+is no shuffle, and per-iteration traffic is O(batches × k × d),
+independent of row count: the shape of MLlib's own treeAggregate, and
+the shape that survives 100 TB. :func:`assign_arrow` labels whole
+tables on the same kernels; :func:`assign` and
+:func:`recompute_centroids` are the pure-expression (JVM-only) forms
+of the same two steps.
 
 Empty-cluster policy: a cluster that attracts no points keeps its
 previous centroid (the canonical Flink example silently drops such ids
@@ -28,14 +31,16 @@ deterministic superset — with k real data points as seeds it never
 triggers on the test blobs). The NumPy oracle in tests mirrors this.
 
 Tie-break: nearest centroid with the LOWEST id wins, implemented by
-taking ``array_min`` over ``struct(dist, cid)`` (struct ordering
-compares dist first, then cid) — same first-seen/lowest-id semantics as
-the reference's ``<`` comparison loop.
+taking ``array_min`` over ``struct(dist, cid)`` in the expression forms
+(struct ordering compares dist first, then cid) and by numpy's
+first-minimum ``argmin`` in the Arrow kernels — same first-seen/lowest-id
+semantics as the reference's ``<`` comparison loop.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import time
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,44 +135,97 @@ def recompute_centroids(assigned: DataFrame, dim: int, vec_col: str = "embedding
     )
 
 
+def _make_kernels():
+    """The numpy kernels the Arrow paths run inside Python workers.
+
+    Both are closures (qualname ``_make_kernels.<locals>.*``), so
+    cloudpickle ships them BY VALUE: a module-level function would
+    pickle by reference and fail in workers whose sys.path lacks the
+    package (see functions/imagecodec.py)."""
+
+    def arrow_vectors(batch, col: str):
+        """Decode list column ``col`` of an Arrow record batch to a
+        ``(rows, d)`` float64 array: one ``flatten()`` plus a reshape,
+        no Python object per row. Raises ``ValueError`` naming the
+        column on a null vector, a null element or unequal lengths."""
+        import numpy as np
+
+        arr = batch.column(col)
+        if len(arr) == 0:
+            return np.empty((0, 0), dtype=np.float64)
+        if arr.null_count:
+            raise ValueError(f"column {col!r} has a null vector")
+        flat = arr.flatten()
+        if flat.null_count:
+            raise ValueError(f"column {col!r} has a null vector element")
+        lengths = arr.value_lengths().to_numpy()
+        if (lengths != lengths[0]).any():
+            raise ValueError(f"column {col!r} has vectors of unequal length")
+        values = flat.to_numpy(zero_copy_only=False)
+        return values.astype(np.float64, copy=False).reshape(len(arr), -1)
+
+    def nearest(P, C):
+        """``(argmin, min)`` of the squared distances from each row of
+        ``P`` to each row of ``C``, lowest index on ties. One ``(rows,)``
+        column per centroid with the same ``(p−c)²`` fold over the last
+        axis as the ``(rows × k × d)`` tensor form and the numpy oracle,
+        so the results are bit-identical, with a ``(rows, d)`` temporary
+        instead of a ``(rows, k, d)`` one."""
+        import numpy as np
+
+        d2 = np.empty((len(C), len(P)))
+        for j in range(len(C)):
+            d2[j] = ((P - C[j]) ** 2).sum(axis=1)
+        a = d2.argmin(axis=0)
+        return a, d2[a, np.arange(len(P))]
+
+    return arrow_vectors, nearest
+
+
+arrow_vectors, _nearest = _make_kernels()
+
+
 def assign_arrow(
     points: DataFrame,
     cents: Centroids,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Bulk-scoring assign: Arrow-batched numpy argmin.
+    """Bulk-scoring assign: ``mapInArrow`` with a numpy argmin per batch.
 
     Same semantics as :func:`assign` (same direct (p−c)² fold as the
     NumPy oracle, lowest-id tie-break via argmin) but 13× faster on wide
     scans (measured 0.69 s vs 9.3 s for 2M×16-d rows at local[32]):
     the JVM higher-order-function expression allocates a zipped array
     per (row × centroid), while numpy does one vectorized pass per
-    Arrow batch. Use this for labeling whole tables; use :func:`assign`
-    when the result feeds further Catalyst expressions in the same
-    projection."""
+    Arrow batch, decoded by :func:`arrow_vectors` without pandas. Use
+    this for labeling whole tables; use :func:`assign` when the result
+    feeds further Catalyst expressions in the same projection.
+
+    Emits ``id_col`` (cast to ``long``), ``cid`` (int) and ``dist``
+    (double, squared distance)."""
     import numpy as np
-    import pandas as pd
 
     C = np.array([v for _, v in cents], dtype=np.float64)
     ids = np.array([cid for cid, _ in cents], dtype=np.int64)
 
     def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
+        import pyarrow as pa
+
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            P = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            d2 = ((P[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cid": ids[a].astype("int32"),
-                    "dist": d2[np.arange(len(a)), a],
-                }
+            a, dist = _nearest(arrow_vectors(batch, vec_col), C)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(id_col).cast(pa.int64()),
+                    pa.array(ids[a].astype(np.int32)),
+                    pa.array(dist),
+                ],
+                names=[id_col, "cid", "dist"],
             )
 
-    return points.select(id_col, vec_col).mapInPandas(
+    return points.select(id_col, vec_col).mapInArrow(
         gen, f"{id_col} long, cid int, dist double"
     )
 
@@ -175,49 +233,59 @@ def assign_arrow(
 def _partial_sums_df(points: DataFrame, centroids, vec_col: str = "embedding"):
     """One Lloyd's step as Arrow-batched per-partition partial aggregation.
 
-    ``mapInPandas`` emits ≤k rows of (cid, n, Σvec) per Arrow batch —
+    ``mapInArrow`` emits ≤k rows of (cid, n, Σvec) per Arrow batch —
     the map-side combine — and the driver finishes the tiny reduce. This
     is MLlib's own treeAggregate shape: per-iteration traffic is
     O(batches × k × d) regardless of row count, there is NO shuffle
     stage, and the plan contains no iteration-dependent literals, so
     nothing recompiles between steps (measured at sf0.1: 0.45 s/iter vs
-    0.9 s/iter for the pure-expression form — Python workers are reused
-    and the numpy argmin/matmul is vectorized over whole batches).
+    0.9 s/iter for the pure-expression form). Each batch is decoded by
+    :func:`arrow_vectors` and scored by :func:`_nearest`; counts come
+    from ``bincount`` and each non-empty cluster's sum from
+    ``P[a == c].sum(axis=0)``, the same fold as the numpy oracle.
 
     The expression-based :func:`assign` remains the one-shot/predict
     path; this is the hot loop only.
     """
     import numpy as np
-    import pandas as pd
 
     C = np.asarray(centroids, dtype=np.float64)
     k, d = C.shape
+    names = ["cid", "n"] + [f"s{i}" for i in range(d)]
 
     def part(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        import pyarrow as pa
+
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            P = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            d2 = ((P[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            rows = []
-            for c in range(k):
-                m = a == c
-                if m.any():
-                    rows.append([c, int(m.sum())] + P[m].sum(axis=0).tolist())
-            yield pd.DataFrame(
-                rows, columns=["cid", "n"] + [f"s{i}" for i in range(d)]
+            P = arrow_vectors(batch, vec_col)
+            a, _ = _nearest(P, C)
+            n = np.bincount(a, minlength=k)
+            cids = np.flatnonzero(n)
+            sums = np.array([P[a == c].sum(axis=0) for c in cids])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(cids.astype(np.int32)), pa.array(n[cids])]
+                + [pa.array(sums[:, i]) for i in range(d)],
+                names=names,
             )
 
     schema = "cid int, n long, " + ", ".join(f"s{i} double" for i in range(d))
-    return points.select(vec_col).mapInPandas(part, schema)
+    return points.select(vec_col).mapInArrow(part, schema)
 
 
 @dataclass
 class KMeansModel:
+    """Fitted centroids plus ``trace``: one dict per Lloyd's iteration
+    with its 1-based ``iteration``, the max squared centroid ``shift``,
+    the cluster ``sizes`` (in centroid order), the ids of ``empty``
+    clusters, and the iteration's ``wall_s``. The analogue of the Flink
+    reference's per-iteration aggregators."""
+
     centroids: Centroids
     dim: int
     vec_col: str = "embedding"
+    trace: list[dict] = field(default_factory=list)
 
     def predict(self, points: DataFrame) -> DataFrame:
         return assign(points, self.centroids, self.vec_col)
@@ -238,11 +306,11 @@ def fit(
     init: Centroids | None = None,
     tol: float | None = None,
 ) -> KMeansModel:
-    """Bulk iteration (SURVEY §2A A8): driver-side loop over assign +
-    recompute. Points are cached ONCE; each iteration's plan is
-    cache-scan → map → partial agg, so lineage never grows (the
-    centroids enter as fresh literals each step — no localCheckpoint
-    needed, unlike a join-based formulation).
+    """Bulk iteration (SURVEY §2A A8): driver-side loop, one
+    :func:`_partial_sums_df` job per iteration. Points are cached ONCE;
+    each iteration's plan is cache-scan → ``mapInArrow`` partials, so
+    lineage never grows (the centroids ride in the closure — no
+    localCheckpoint needed, unlike a join-based formulation).
 
     ``tol``: optional convergence extension beyond the reference's
     fixed-iteration contract — stop early once the max squared centroid
@@ -252,16 +320,19 @@ def fit(
     The dimension comes from the init centroids rather than a probe
     job. Empty points raise ``ValueError``: via the empty init collect,
     or, for an explicit ``init``, via the first iteration's empty
-    partials."""
+    partials. The model's ``trace`` is built from the partials the loop
+    already collects, so it costs no job."""
     pts = points.select(id_col, vec_col)
     pts.persist()
+    trace: list[dict] = []
     try:
         cents = init if init is not None else init_centroids(pts, k, id_col, vec_col)
         if not cents:
             raise ValueError("empty points input")
         dim = len(cents[0][1])
         ids = [cid for cid, _ in cents]
-        for _ in range(n_iter):
+        for it in range(1, n_iter + 1):
+            t0 = time.perf_counter()
             partials = _partial_sums_df(pts, [v for _, v in cents], vec_col).collect()
             if not partials:
                 raise ValueError("empty points input")
@@ -281,19 +352,25 @@ def fit(
                 )
                 for pos, (_, old) in enumerate(cents)
             ]
-            if tol is not None:
-                shift = max(
-                    sum((a - b) * (a - b) for a, b in zip(nv, ov))
-                    for (_, nv), (_, ov) in zip(new_cents, cents)
-                )
-                cents = new_cents
-                if shift < tol:
-                    break
-            else:
-                cents = new_cents
+            shift = max(
+                sum((a - b) * (a - b) for a, b in zip(nv, ov))
+                for (_, nv), (_, ov) in zip(new_cents, cents)
+            )
+            cents = new_cents
+            trace.append(
+                {
+                    "iteration": it,
+                    "shift": shift,
+                    "sizes": [sums[pos][0] if pos in sums else 0 for pos in range(len(ids))],
+                    "empty": [ids[pos] for pos in range(len(ids)) if pos not in sums],
+                    "wall_s": time.perf_counter() - t0,
+                }
+            )
+            if tol is not None and shift < tol:
+                break
     finally:
         pts.unpersist()
-    return KMeansModel(centroids=cents, dim=dim, vec_col=vec_col)
+    return KMeansModel(centroids=cents, dim=dim, vec_col=vec_col, trace=trace)
 
 
 def wcss(assigned: DataFrame) -> float:

@@ -12,6 +12,12 @@ confs every operator relies on:
   to DuckDB's naive reading when results are compared.
 - AQE on — runtime coalescing / skew-join handling; at 100 TB this is
   what turns a mis-sized shuffle into a survivable one.
+
+:func:`get_spark` also sets static confs, which only take effect when a
+SparkContext starts: among them the Python worker daemon
+(:mod:`flink_kmeans_spark.worker_daemon`). ``ensure_conf`` cannot apply
+those to the driver's already-running session, so its Python workers
+run the stock ``pyspark.daemon``.
 """
 
 from __future__ import annotations
@@ -87,6 +93,11 @@ def get_spark(app_name: str = "flink-kmeans-spark", shuffle_partitions: int | No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers fork from our daemon, which stops each task from
+        # re-reading pyspark.zip (see worker_daemon); the package's parent
+        # dir on the workers' path lets the daemon import from any cwd
+        .config("spark.python.daemon.module", "flink_kmeans_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

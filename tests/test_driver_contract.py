@@ -9,12 +9,15 @@ while the plain replica failed). Runs the worker-shipping queries only;
 the full 73-key gate lives in tools/check_oracles.py.
 """
 
+import os
 import subprocess
 import sys
 
-SCRIPT = """
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+SCRIPT = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {REPO_ROOT!r})
 from pyspark.sql import SparkSession
 spark = SparkSession.builder.master("local[4]").appName("contract").getOrCreate()
 import __spark_entry__ as E

@@ -305,3 +305,92 @@ def test_sample_coreset_kmeans_properties(spark, sf_dir):
     Xs = np.array([X[k] for k, i in enumerate(ids) if int(i) in got])
     est = (w * ((Xs - C[:, None]) ** 2).sum(axis=2).min(axis=0)).sum()
     assert abs(est - full) / full < 0.3
+
+
+def _vector_batch(rows, type_=None):
+    import pyarrow as pa
+
+    return pa.record_batch(
+        [pa.array(rows, type_ or pa.list_(pa.float64()))], names=["embedding"]
+    )
+
+
+def test_arrow_vectors_decodes_sliced_empty_and_float32():
+    """The decode honours a slice's offset, keeps a zero-row batch
+    well-formed, and widens float32 exactly."""
+    import pyarrow as pa
+
+    X = np.arange(24, dtype=np.float64).reshape(6, 4) / 7
+    batch = _vector_batch(X.tolist())
+    np.testing.assert_array_equal(km.arrow_vectors(batch.slice(2, 3), "embedding"), X[2:5])
+    assert km.arrow_vectors(batch.slice(0, 0), "embedding").shape == (0, 0)
+    X32 = X.astype(np.float32)
+    got = km.arrow_vectors(_vector_batch(X32.tolist(), pa.list_(pa.float32())), "embedding")
+    assert got.dtype == np.float64
+    np.testing.assert_array_equal(got, X32.astype(np.float64))
+
+
+@pytest.mark.parametrize(
+    "rows, why",
+    [
+        ([[1.0, 2.0], [3.0]], "unequal length"),
+        ([[1.0, None], [3.0, 4.0]], "null vector element"),
+        ([[1.0, 2.0], None], "null vector"),
+    ],
+)
+def test_arrow_vectors_rejects_malformed(rows, why):
+    with pytest.raises(ValueError, match=f"'embedding' has .*{why}"):
+        km.arrow_vectors(_vector_batch(rows), "embedding")
+
+
+def test_nearest_equals_tensor_fold_and_breaks_ties_low():
+    rng = np.random.default_rng(3)
+    P = rng.normal(size=(500, 32))
+    C = rng.normal(size=(16, 32))
+    d2 = ((P[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+    a, dist = km._nearest(P, C)
+    assert np.array_equal(a, d2.argmin(axis=1))
+    assert np.array_equal(dist, d2[np.arange(len(P)), a])
+    # duplicate centroids tie exactly: the lower id wins
+    a, _ = km._nearest(P, np.vstack([C[:3], C[:3]]))
+    assert a.max() <= 2
+
+
+def test_assign_arrow_casts_int_id_to_long(spark):
+    df = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [5.0, 5.0])], "vec_id int, embedding array<double>"
+    )
+    out = km.assign_arrow(df, [(0, [0.0, 0.0]), (1, [5.0, 5.0])])
+    assert out.schema.simpleString() == "struct<vec_id:bigint,cid:int,dist:double>"
+    assert sorted((r.vec_id, r.cid) for r in out.collect()) == [(1, 0), (2, 1)]
+
+
+@pytest.mark.parametrize("vec", [[1.0, None], None], ids=["element", "vector"])
+def test_null_vector_raises_naming_column(spark, vec):
+    """A null vector or element is an error on both Arrow paths, never a
+    label: assign_arrow and fit report the decode's ValueError."""
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [4.0, 4.0]), (2, vec)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="ValueError: column 'embedding' has a null"):
+        km.assign_arrow(df, [(0, [0.0, 0.0]), (1, [4.0, 4.0])]).collect()
+    with pytest.raises(Exception, match="ValueError: column 'embedding' has a null"):
+        km.fit(df, k=2, n_iter=2)
+
+
+def test_fit_trace(spark, points):
+    """One trace entry per iteration, sized from the partials; with
+    ``tol`` the loop stops at the first entry whose shift is below it."""
+    df, pdf, _ = points
+    model = km.fit(df, k=K, n_iter=3)
+    assert [t["iteration"] for t in model.trace] == [1, 2, 3]
+    for t in model.trace:
+        assert sum(t["sizes"]) == len(pdf)
+        assert t["empty"] == [cid for (cid, _), n in zip(model.centroids, t["sizes"]) if n == 0]
+        assert t["shift"] >= 0 and t["wall_s"] > 0
+
+    tol = 1e-12
+    shifts = [t["shift"] for t in km.fit(df, k=K, n_iter=50, tol=tol).trace]
+    assert len(shifts) < 50
+    assert shifts[-1] < tol and all(s >= tol for s in shifts[:-1])

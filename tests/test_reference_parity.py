@@ -2,6 +2,7 @@
 (CSV points + CSV centroids → fixed-iteration Lloyd's → CSV output),
 checked against NumPy on the same inputs."""
 
+import os
 import subprocess
 import sys
 
@@ -10,6 +11,8 @@ import pytest
 
 from flink_kmeans_spark.operators import kmeans as km
 from flink_kmeans_spark.sources.tables import read_centroids_csv, read_points_csv
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -82,7 +85,7 @@ def test_cli_end_to_end(tmp_path, csv_inputs):
             "--iterations",
             "5",
         ],
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
         capture_output=True,
         text=True,
         timeout=300,

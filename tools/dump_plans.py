@@ -5,9 +5,11 @@ changing any query:  python tools/dump_plans.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SHOWCASE = [
     ("scan_parquet", "predicate pushdown + column pruning at the parquet reader"),
@@ -135,7 +137,7 @@ def main() -> None:
         "```",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(out)} lines)")
 

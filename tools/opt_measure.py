@@ -19,7 +19,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -31,7 +32,7 @@ def main() -> int:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--no-plan", action="store_true",
                     help="skip the explain dump (timing only)")
-    ap.add_argument("--plan-dir", default="/root/repo/plans/r12")
+    ap.add_argument("--plan-dir", default=os.path.join(ROOT, "plans", "r12"))
     args = ap.parse_args()
 
     from flink_kmeans_spark.plans.registry import QUERIES
