@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.bucketed import BucketedIndex
 from ..sources import load_table
 from .registry import register
 
@@ -372,26 +373,22 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     read bucket-for-bucket by the same task. The merge hint keeps AQE
     from broadcasting the small side at test scale, which would hide
     the property being demonstrated. Result is bucketing-independent,
-    hence the plain-SQL oracle."""
-    from ..session import scratch_dir
+    hence the plain-SQL oracle. Each bucketed copy is built once per
+    data fingerprint of its source file, so a rewritten source is
+    re-bucketed instead of answered from the stale copy."""
+    import os
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    tag = abs(hash(sf_dir)) % 10**8
-    names = {}
-    for nm, df, key in (("orders_b", o, "o_orderkey"), ("lineitem_b", l, "l_orderkey")):
-        tbl = f"{nm}_{tag}"
-        names[nm] = tbl
-        if not spark.catalog.tableExists(tbl):
-            (
-                df.write.bucketBy(8, key)
-                .sortBy(key)
-                .option("path", scratch_dir(tbl))
-                .mode("overwrite")
-                .saveAsTable(tbl)
-            )
-    ob = spark.table(names["orders_b"]).hint("merge")
-    lb = spark.table(names["lineitem_b"]).hint("merge")
+    o, l = (
+        BucketedIndex.build_once(
+            spark, f"{name}_b", os.path.join(sf_dir, f"{name}.parquet"), 8, key
+        ).ensure(lambda: _t(spark, sf_dir, name).select(*cols))
+        for name, key, cols in (
+            ("orders", "o_orderkey", ("o_orderkey", "o_orderpriority")),
+            ("lineitem", "l_orderkey", ("l_orderkey", "l_quantity")),
+        )
+    )
+    ob = spark.table(o.name).hint("merge")
+    lb = spark.table(l.name).hint("merge")
     return (
         ob.join(lb, ob.o_orderkey == lb.l_orderkey)
         .groupBy("o_orderpriority")

@@ -15,7 +15,7 @@ from ..operators import dedup as DD
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..operators import udfs as U
-from ..session import index_dir
+from ..operators.bucketed import BucketedIndex
 from ..sources import load_table, spread_scan
 from .registry import register
 
@@ -1707,98 +1707,6 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.knn_graph(_emb(spark, sf_dir), k=3)
 
 
-def _data_fingerprint(spark: SparkSession, path: str) -> list:
-    """Per-file ``name:length:modificationTime`` fingerprint of a data
-    path, resolved through the Hadoop FileSystem API so it works on any
-    scheme the session can read (s3a://, hdfs://, file:) — ``os.stat``
-    is inert off the local filesystem, which would silently disable the
-    staleness detection the ANN index tag relies on (ADVICE r7; same
-    rationale as streaming/jobs.py stream_table). Local os.stat
-    fallback only if the JVM call is unavailable."""
-    import os
-
-    try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return []
-        st = fs.getFileStatus(jpath)
-        if st.isDirectory():
-            parts = []
-            for s in fs.listStatus(jpath):
-                parts.append(
-                    f"{s.getPath().getName()}:{s.getLen()}:{s.getModificationTime()}"
-                )
-            return sorted(parts)
-        return [f"{st.getLen()}:{st.getModificationTime()}"]
-    except Exception:
-        pass
-    local = path.removeprefix("file:")
-    if os.path.isdir(local):
-        return sorted(
-            f"{name}:{os.stat(os.path.join(local, name)).st_size}:"
-            f"{os.stat(os.path.join(local, name)).st_mtime_ns}"
-            for name in os.listdir(local)
-        )
-    if os.path.exists(local):
-        st = os.stat(local)
-        return [f"{st.st_size}:{st.st_mtime_ns}"]
-    return []
-
-
-def _gc_stale_index_tags(
-    spark: SparkSession, prefix: str, keep_tbl: str, match=None,
-    min_age_s: float = 0.0,
-) -> None:
-    """Drop catalog tables and .index/ dirs named ``<prefix><tag>``
-    whose tag differs from the current one. The data-fingerprinted tag
-    (ADVICE r6) means every in-place regeneration of the source data
-    mints a NEW table name; without GC the previous tag's catalog entry
-    and parquet files accumulate forever — a milder re-introduction of
-    the r5 leak (ADVICE r7). Stale tags reference superseded data, so
-    no live handle can validly depend on them. ``match`` optionally
-    narrows which prefixed names are candidates (e.g. legacy naming
-    schemes only); ``min_age_s`` spares recently-touched dirs so a
-    CONCURRENT process's in-flight rebuild (different sf_dir ⇒
-    different tag) is never deleted under it. Best-effort: a
-    concurrent session may still own an entry we try to drop."""
-    import os
-    import shutil
-    import time
-
-    idx_root = os.path.dirname(index_dir(keep_tbl))
-
-    def stale(name: str) -> bool:
-        if not (
-            name.startswith(prefix)
-            and name != keep_tbl
-            and (match is None or match(name))
-        ):
-            return False
-        if min_age_s:
-            try:
-                if time.time() - os.path.getmtime(
-                    os.path.join(idx_root, name)
-                ) < min_age_s:
-                    return False
-            except OSError:
-                pass  # dir gone / unreadable — table-only leftover, drop
-        return True
-
-    try:
-        for t in spark.catalog.listTables():
-            if stale(t.name):
-                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-    except Exception:
-        pass
-    try:
-        for name in os.listdir(idx_root):
-            if stale(name):
-                shutil.rmtree(os.path.join(idx_root, name), ignore_errors=True)
-    except OSError:
-        pass
-
-
 @register(
     "sim_ann_repartitioned",
     oracle="""
@@ -1849,14 +1757,11 @@ def sim_ann_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries' cells (bounded: ≤ |batch| ints), filters the index with a
     literal ``bucket IN (...)`` — which Spark turns into BUCKET
     PRUNING, reading only the matching bucket files (the callable
-    asserts ``SelectedBucketsCount`` appears in the scan plan; a
-    regression to a full scan raises) — and broadcast-joins the tiny
-    query set for exact in-cell cosine top-3. The probes run on a
-    CLONED session (``spark.newSession()``, same conf-isolation
-    pattern as join_skew_aqe) with autoBucketedScan disabled, because
-    the planner's auto-disable rule only considers downstream
-    distribution needs and would silently drop the bucketed scan —
-    and with it the pruning — for a filter-only probe.
+    asserts the scan is pruned; a regression to a full scan raises) —
+    and broadcast-joins the tiny query set for exact in-cell cosine
+    top-3. The probes run on ``BucketedIndex.probe``'s cloned session,
+    which keeps the bucketed scan (and with it the pruning) for a
+    filter-only probe.
 
     This is the production ANN serving shape at 100 TB: index cost is
     paid at ingest, every query batch touches only its cells' files,
@@ -1865,12 +1770,8 @@ def sim_ann_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle). The sign-grid cell is engine-portable, so the WHOLE
     pipeline — cells, candidate sets, ranks — is SQL-oracled, unlike
     recall-bounded random-hyperplane LSH (sim_lsh_topk)."""
-    from pyspark.sql.window import Window
-
-    tbl = _ann_index_ensure(spark, sf_dir)
-    s2 = spark.newSession()  # shared catalog; own SQLConf for the probes
-    s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    idx = s2.table(tbl)
+    index = _ann_index_ensure(spark, sf_dir)
+    idx = index.probe()
     qrows = sorted(
         idx.orderBy("vec_id").limit(10).select("vec_id", "bucket").collect(),
         key=lambda r: r["vec_id"],
@@ -1879,14 +1780,9 @@ def sim_ann_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     for batch, rows in (("A", qrows[:5]), ("B", qrows[5:])):
         cells = sorted({r["bucket"] for r in rows})
         ids = [r["vec_id"] for r in rows]
-        cand = idx.filter(F.col("bucket").isin(cells))
-        scan_plan = cand._jdf.queryExecution().executedPlan().toString()
-        if "SelectedBucketsCount" not in scan_plan:
-            raise RuntimeError(
-                "sim_ann_repartitioned: bucket pruning did not engage "
-                "(no SelectedBucketsCount in the probe scan plan) — the "
-                "key exists to PIN the pruned-scan shape"
-            )
+        cand = index.pruned(
+            idx.filter(F.col("bucket").isin(cells)), "sim_ann_repartitioned"
+        )
         top = _ann_cell_topk(idx, cand, ids, k=3).select(
             F.lit(batch).alias("batch"), "q_id", "n_id", "cosine", "rk"
         )
@@ -1894,87 +1790,38 @@ def sim_ann_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _ann_index_ensure(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once/reuse-warm 16-bucket sign-grid ANN index over the
-    embeddings table; returns the catalog table name. Shared by
-    sim_ann_repartitioned (batch probes) and streaming_ann_probe (the
-    online-serving twin).
-
-    Deterministic tag (ADVICE r5): Python's hash() is per-process
-    salted, which made the "build once" cache miss across driver
-    processes and leak uniquely-named ann_index_* tables. An md5 of
-    the sf_dir is stable everywhere, so a warm metastore + index dir
-    is actually REUSED across runs. ADVICE r6: the tag also folds in
-    a cheap fingerprint of the source data (per-file size + mtime of
-    embeddings.parquet) so regenerating the data IN PLACE changes the
-    tag and forces a rebuild instead of silently reusing a stale
-    index. The fingerprint goes through the Hadoop FileSystem API
-    (ADVICE r7) so it also fires for object-store sf_dirs
-    (s3a://, hdfs://) where os.stat is inert; local os.stat fallback."""
-    import hashlib
-    import os
-
+def _ann_indexed(e: DataFrame) -> DataFrame:
+    """Embeddings with their sign-grid cell (bit i = embedding[i] > 0
+    over the first 8 dims) as ``bucket`` and their L2 norm as ``nrm``:
+    the rows of every ANN index."""
     from ..functions.vectors import l2norm
 
-    e = _emb(spark, sf_dir)
     v = F.col("embedding").cast("array<double>")
     cell = sum(
         (F.when(v.getItem(i) > 0, F.lit(1 << i)).otherwise(F.lit(0)))
         for i in range(8)
     )
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    fp_parts = _data_fingerprint(spark, emb_path)
-    dir_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    fp_tag = hashlib.md5("|".join(fp_parts).encode()).hexdigest()[:8]
-    tbl = f"ann_index_{dir_tag}_{fp_tag}"
-    # GC superseded fingerprints of THIS sf_dir (in-place data regen
-    # mints a new fp_tag; the old one's table + files would otherwise
-    # leak forever — ADVICE r7). Other sf_dirs' warm indexes are left
-    # alone so the tri-scale gate keeps its build-once reuse. Legacy
-    # single-tag names (pre-r8 ``ann_index_<8hex>``) are swept too —
-    # nothing can reference them under the two-part scheme.
-    _gc_stale_index_tags(spark, f"ann_index_{dir_tag}_", tbl)
-    _gc_stale_index_tags(
-        spark, "ann_index_", tbl,
-        match=lambda name: name.count("_") == 2,  # ann_index_<tag> only
+    return e.select(
+        "vec_id", "embedding", cell.alias("bucket"), l2norm(v).alias("nrm")
     )
-    # The index outlives this call, so it lives in the never-pruned
-    # index dir; trust the catalog only when that path still holds
-    # data files.
-    idx_path = index_dir(tbl)
-    have_files = os.path.isdir(idx_path) and any(
-        f.endswith(".parquet") for f in os.listdir(idx_path)
-    )
-    if spark.catalog.tableExists(tbl):
-        # head() is None when DESCRIBE has no Location row (e.g. a view
-        # squatting on the name) — treat that as "wrong table, rebuild"
-        # instead of raising TypeError (ADVICE r6).
-        loc_row = (
-            spark.sql(f"DESCRIBE FORMATTED {tbl}")
-            .filter(F.col("col_name") == "Location")
-            .head()
-        )
-        loc = loc_row["data_type"] if loc_row is not None else ""
-        if not have_files or not loc.rstrip("/").endswith(idx_path):
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    if not spark.catalog.tableExists(tbl):
-        os.makedirs(idx_path, exist_ok=True)
-        (
-            e.select(
-                "vec_id",
-                "embedding",
-                cell.alias("bucket"),
-                l2norm(v).alias("nrm"),
-            )
-            # r12 (guide §6): one file per bucket — see _ann_inc_build
-            .repartition(16, "bucket")
-            .write.bucketBy(16, "bucket")
-            .sortBy("bucket")
-            .option("path", idx_path)
-            .mode("overwrite")
-            .saveAsTable(tbl)
-        )
-    return tbl
+
+
+def _ann_index_ensure(spark: SparkSession, sf_dir: str) -> BucketedIndex:
+    """Build-once/reuse-warm 16-bucket sign-grid ANN index over the
+    embeddings table. Shared by sim_ann_repartitioned (batch probes)
+    and streaming_ann_probe (the online-serving twin).
+
+    The table is named by the path and data fingerprint (per-file size
+    and mtime) of embeddings.parquet, so regenerating the data in place
+    forces a rebuild instead of reusing a stale index. Reuse happens
+    only within one process: ``get_spark`` sessions keep their catalog
+    in memory, so a new process rebuilds the table."""
+    import os
+
+    return BucketedIndex.build_once(
+        spark, "ann_index", os.path.join(sf_dir, "embeddings.parquet"),
+        16, "bucket",
+    ).ensure(lambda: _ann_indexed(_emb(spark, sf_dir)))
 
 
 def _ann_cell_topk(idx: DataFrame, cand: DataFrame, ids: list, k: int = 3) -> DataFrame:
@@ -3645,47 +3492,6 @@ def multimodal_audio_spectrogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.spectrogram_audio_media(media)
 
 
-def _ann_inc_build(spark, indexed, tbl, idx_path, on_base_written=None) -> None:
-    """Base-overwrite + delta-append of the 16-bucket incremental ANN
-    index (shared by sim_ann_incremental and its mechanics test).
-    ``on_base_written(idx_path)`` fires BETWEEN the two writes so a
-    test can snapshot the base generation's files/mtimes and prove the
-    append leaves them untouched (ADVICE r7 — the old test captured
-    mtimes after both writes, so the assertion was vacuous)."""
-    import os
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    if os.path.isdir(idx_path):
-        shutil.rmtree(idx_path)
-    os.makedirs(idx_path, exist_ok=True)
-    # r12 (guide §6 small-files): repartition by the bucket function
-    # itself (murmur3 mod 16 — exactly Spark's bucket id) so each task
-    # writes ONE bucket file instead of one per (bucket, input task).
-    (
-        indexed.filter(F.col("vec_id") % 10 != 0)
-        .repartition(16, "bucket")
-        .write.bucketBy(16, "bucket")
-        .sortBy("bucket")
-        .option("path", idx_path)
-        .mode("overwrite")
-        .saveAsTable(tbl)
-    )
-    if on_base_written is not None:
-        on_base_written(idx_path)
-    # The delta: same bucket spec, append mode — new files per bucket,
-    # base files untouched (the incremental-ingest contract).
-    (
-        indexed.filter(F.col("vec_id") % 10 == 0)
-        .repartition(16, "bucket")
-        .write.bucketBy(16, "bucket")
-        .sortBy("bucket")
-        .option("path", idx_path)
-        .mode("append")
-        .saveAsTable(tbl)
-    )
-
-
 @register(
     "sim_ann_incremental",
     oracle="""
@@ -3732,8 +3538,8 @@ def sim_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 8a) — dedup_incremental's delta-ingest pattern applied to
     sim_ann_repartitioned's bucketed index: 90% of the corpus
     (vec_id % 10 != 0) is written as the 16-bucket base table, the
-    remaining 10% arrives later and is APPENDED with the same
-    bucketBy(16)/sortBy spec — Spark validates the spec and writes new
+    remaining 10% arrives later and is APPENDED with the same bucket
+    spec — Spark validates the spec and writes new
     per-bucket files, so the delta never touches or rewrites base
     files and bucket pruning keeps working across both generations.
     A probe of the first 10 vec_ids then runs exact in-cell cosine
@@ -3746,98 +3552,29 @@ def sim_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch costs one bucket-grain shuffle of ONLY the new rows (never a
     corpus rescan, never a rewrite of existing bucket files), and a
     probe reads only its cells' files across all generations
-    (SelectedBucketsCount asserted below). The table is rebuilt per
-    call on purpose — this key pins the DELTA-INGEST mechanics; the
-    warm-reuse path is sim_ann_repartitioned's pin."""
-    import hashlib
-    import os
-
-    from pyspark.sql.window import Window
-
-    from ..functions.vectors import l2norm
-
-    e = _emb(spark, sf_dir)
-    v = F.col("embedding").cast("array<double>")
-    cell = sum(
-        (F.when(v.getItem(i) > 0, F.lit(1 << i)).otherwise(F.lit(0)))
-        for i in range(8)
-    )
-    indexed = e.select(
-        "vec_id", "embedding", cell.alias("bucket"), l2norm(v).alias("nrm")
-    )
-    # pid in the tag: this key DROPS AND REBUILDS its dir per call, so
-    # two concurrent sessions sharing a repo (parallel gate runs, two
-    # jobs on one lake prefix) would otherwise delete files under each
-    # other's readers (observed: FAILED_READ_FILE.FILE_NOT_EXIST when
-    # three gates raced). Process-unique dirs never collide; stale
-    # processes' leftovers age out via the same GC below.
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8] + f"_{os.getpid()}"
-    tbl = f"ann_inc_{tag}"
-    idx_path = index_dir(tbl)
-    # This key rebuilds per call, so other sf_dirs'/processes' ann_inc_*
-    # leftovers are pure leak (one per probe-replica path otherwise) —
-    # GC them; results are localCheckpoint'ed, so no live handle reads
-    # the files.
-    _gc_stale_index_tags(spark, "ann_inc_", tbl, min_age_s=3600)
-    _ann_inc_build(spark, indexed, tbl, idx_path)
-    s2 = spark.newSession()  # shared catalog; own SQLConf for the probe
-    s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    idx = s2.table(tbl)
+    (bucket pruning asserted below). The table is rebuilt per call on
+    purpose — this key pins the DELTA-INGEST mechanics; the warm-reuse
+    path is sim_ann_repartitioned's pin."""
+    indexed = _ann_indexed(_emb(spark, sf_dir))
+    index = BucketedIndex.per_call(spark, "ann_inc", 16, "bucket")
+    index.overwrite(indexed.filter(F.col("vec_id") % 10 != 0))
+    # the delta: same bucket spec, new files per bucket, base files
+    # untouched (the incremental-ingest contract)
+    index.append(indexed.filter(F.col("vec_id") % 10 == 0))
+    idx = index.probe()
     qrows = idx.orderBy("vec_id").limit(10).select("vec_id", "bucket").collect()
     cells = sorted({r["bucket"] for r in qrows})
     ids = [r["vec_id"] for r in qrows]
-    cand = idx.filter(F.col("bucket").isin(cells))
-    scan_plan = cand._jdf.queryExecution().executedPlan().toString()
-    if "SelectedBucketsCount" not in scan_plan:
-        raise RuntimeError(
-            "sim_ann_incremental: bucket pruning did not engage after the "
-            "delta append (no SelectedBucketsCount in the probe scan plan)"
-        )
-    q = idx.filter(F.col("vec_id").isin(ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("embedding").cast("array<double>").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
+    cand = index.pruned(
+        idx.filter(F.col("bucket").isin(cells)),
+        "sim_ann_incremental after the delta append",
     )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("q_vec"),
-            F.col("embedding").cast("array<double>"),
-            lambda a, b: a * b,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    out = _ann_cell_topk(idx, cand, ids, k=3).withColumn(
+        "phase",
+        F.when(F.col("n_id") % 10 == 0, F.lit("delta")).otherwise(F.lit("base")),
     )
-    scored = (
-        cand.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("q_bucket"))
-            & (F.col("vec_id") != F.col("q_id")),
-        )
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            (dot / (F.col("q_nrm") * F.col("nrm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), "n_id")
-    out = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "q_id",
-            "n_id",
-            "cosine",
-            F.col("rk").cast("int").alias("rk"),
-            F.when(F.col("n_id") % 10 == 0, F.lit("delta"))
-            .otherwise(F.lit("base"))
-            .alias("phase"),
-        )
-    )
-    # The key rebuilds base+delta PER CALL (its contract pins the ingest
-    # mechanics), which deletes the files a PREVIOUS call's returned
-    # frame still references. The result is bounded (≤ 3·|queries| rows),
-    # so materialize it eagerly — the handle outlives any later rebuild.
+    # bounded result (≤ 3·|queries| rows): materialize it so the handle
+    # does not depend on the per-call table's files
     return out.localCheckpoint(eager=True)
 
 
@@ -4158,38 +3895,6 @@ def _mh_banded_of(groups: DataFrame, gen: str, bands: int, width: int) -> DataFr
     )
 
 
-def _mh_inc_build(spark, banded_base, banded_delta, tbl, idx_path,
-                  on_base_written=None) -> None:
-    """Base-overwrite + delta-append of the band-bucketed MinHash
-    signature table (shared by dedup_minhash_incremental and its
-    mechanics test — same hook contract as _ann_inc_build)."""
-    import os
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    if os.path.isdir(idx_path):
-        shutil.rmtree(idx_path)
-    os.makedirs(idx_path, exist_ok=True)
-    (
-        banded_base.write.partitionBy("gen")
-        .bucketBy(16, "bkey")
-        .sortBy("bkey")
-        .option("path", idx_path)
-        .mode("overwrite")
-        .saveAsTable(tbl)
-    )
-    if on_base_written is not None:
-        on_base_written(idx_path)
-    (
-        banded_delta.write.partitionBy("gen")
-        .bucketBy(16, "bkey")
-        .sortBy("bkey")
-        .option("path", idx_path)
-        .mode("append")
-        .saveAsTable(tbl)
-    )
-
-
 @register(
     "dedup_minhash_incremental",
     oracle=_minhash_oracle(),
@@ -4199,7 +3904,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL MinHash+LSH dedup (VERDICT r7 item 8a) —
     sim_ann_incremental's delta-ingest pattern applied to the dedup
     index: the corpus's MinHash signatures are persisted as a
-    BAND-BUCKETED table (8 band rows per signature group, bucketBy(16)
+    BAND-BUCKETED table (8 band rows per signature group, 16 buckets
     on the band-slice key), 90% of documents (doc_id % 10 != 0) as the
     base generation, the remaining 10% appended later with the same
     bucket spec — new per-bucket files only, base files never
@@ -4223,10 +3928,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay two group rows sharing every band — found by the join with
     est = 1.0, exactly what the full recompute yields).
     """
-    import hashlib
-    import os
-
-    from ..functions.hashing import MINHASH_P, minhash_coeffs  # noqa: F401
     from ..operators.dedup import minhash_signatures
 
     num_hashes, bands = 32, 8
@@ -4237,35 +3938,17 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = minhash_signatures(
         _docs(spark, sf_dir), num_hashes=num_hashes
     ).localCheckpoint(eager=False)
-
-    def groups_of(part):
-        return _mh_groups_of(part)
-
-    def banded_of(groups, gen):
-        return _mh_banded_of(groups, gen, bands, width)
-
-    base_g = groups_of(sigs.filter(F.col("doc_id") % 10 != 0))
-    delta_g = groups_of(sigs.filter(F.col("doc_id") % 10 == 0))
-    # pid in the tag — per-call drop+rebuild dirs must be process-unique
-    # or concurrent sessions delete files under each other's readers
-    # (same hardening as sim_ann_incremental; GC ages out leftovers)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8] + f"_{os.getpid()}"
-    tbl = f"mh_inc_{tag}"
-    idx_path = index_dir(tbl)
-    _gc_stale_index_tags(spark, "mh_inc_", tbl, min_age_s=3600)
-    _mh_inc_build(
-        spark, banded_of(base_g, "base"), banded_of(delta_g, "delta"), tbl, idx_path
-    )
-    s2 = spark.newSession()  # shared catalog; own SQLConf for the probe
-    s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    # broadcast off in the CLONE only: at gate scale Spark would pick a
-    # BroadcastHashJoin (no exchange either way), making the
-    # colocation assertion vacuous — forcing the sort-merge path makes
-    # the probe exercise exactly the ≥100 TB plan, where the bucketed
-    # layout is what keeps the corpus from re-shuffling on every batch
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    t = s2.table(tbl)
+    base_g = _mh_groups_of(sigs.filter(F.col("doc_id") % 10 != 0))
+    delta_g = _mh_groups_of(sigs.filter(F.col("doc_id") % 10 == 0))
+    index = BucketedIndex.per_call(spark, "mh_inc", 16, "bkey", "gen")
+    index.overwrite(_mh_banded_of(base_g, "base", bands, width))
+    index.append(_mh_banded_of(delta_g, "delta", bands, width))
+    # broadcast off: at gate scale Spark would pick a BroadcastHashJoin
+    # (no exchange either way), making the colocation assertion
+    # vacuous — forcing the sort-merge path makes the probe exercise
+    # exactly the ≥100 TB plan, where the bucketed layout is what keeps
+    # the corpus from re-shuffling on every batch
+    t = index.probe(broadcast=False)
     est = (
         F.size(
             F.filter(
@@ -4343,9 +4026,8 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("p.id_a", "p.id_b", F.lit(1.0).alias("jaccard_est"))
     )
-    # bounded output (near-dup pairs at gate scale); the per-call
-    # rebuild deletes files a previous handle may still reference —
-    # same eager-materialization contract as sim_ann_incremental
+    # bounded output (near-dup pairs at gate scale), materialized like
+    # sim_ann_incremental's
     return cross.unionByName(intra).localCheckpoint(eager=True)
 
 
@@ -4387,7 +4069,6 @@ def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     count the touched fraction shrinks proportionally), and the only
     corpus-wide work is the os-level carry of untouched files, which a
     real object store does as a metadata move."""
-    import hashlib
     import os
     import re
     import shutil
@@ -4414,33 +4095,19 @@ def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i in range(3)
     ]
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8] + f"_{os.getpid()}"
-    tbl, tblc = f"mh_cmpsrc_{tag}", f"mh_cmp_{tag}"
-    idx, idxc = index_dir(tbl), index_dir(tblc)
-    _gc_stale_index_tags(spark, "mh_cmpsrc_", tbl, min_age_s=3600)
-    _gc_stale_index_tags(spark, "mh_cmp_", tblc, min_age_s=3600)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    if os.path.isdir(idx):
-        shutil.rmtree(idx)
-    # r11 note (guide §1 — measured, not assumed): collapsing the
-    # overwrite + 3 appends into ONE unioned partitionBy("gen") write
-    # (base INCLUDED) was tried and measured WORSE (paired fresh-JVM
-    # best-of-4: 11.9 s append loop vs 15.5 s staged union; cold 26.0
-    # vs 33.9) — the single dynamic-partition bucketed write job
-    # carried 4x the concurrent task state.
-    #
-    # r12 (VERDICT r11 item 2, guide §2.4/§2.6): two finer-grained cuts
-    # that keep the base write small and static:
+    src = BucketedIndex.per_call(spark, "mh_cmpsrc", n_buckets, "bkey", "gen")
+    # Measured, not assumed: one unioned write of base + 3 deltas
+    # (paired fresh-JVM best-of-4: 11.9 s append loop vs 15.5 s staged
+    # union) was WORSE — the base's 94% of rows riding in the union
+    # carried 4x the concurrent task state. So:
     # (a) the THREE delta appends (each ~2% of rows) union into ONE
-    #     append job — the task-state blowup above came from the
-    #     94%-of-rows base riding in the union, not from the deltas;
-    #     partitionBy("gen") still lands each delta in its own
-    #     directory, so the table contents and the touched-file layout
-    #     are unchanged;
+    #     append; partitionBy("gen") still lands each delta in its own
+    #     directory, so the contents and touched-file layout are the
+    #     same as three appends;
     # (b) the touched-bucket set is derived from the SAME delta frames
     #     (not the written table) on a second driver thread, so its
     #     job overlaps the base write instead of serializing after the
-    #     last append. F.hash is Murmur3Hash(seed 42) either way —
+    #     append. F.hash is Murmur3Hash(seed 42) either way —
     #     identical bucket ids.
     delta_banded = None
     for i, d in enumerate(deltas):
@@ -4461,60 +4128,30 @@ def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark import inheritable_thread_target
 
-    # (c) repartition each write by the bucket function itself
-    #     (murmur3(bkey) mod n — exactly Spark's bucket id, same as the
-    #     compacted write below) so every task holds exactly ONE
-    #     bucket's rows and writes one file per (gen, bucket) instead
-    #     of one per (gen, bucket, input task) — 8× fewer files at
-    #     sf0.1 (guide §6 small-files), which also shrinks the
-    #     compaction's file listing and the probe scan.
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_touched = pool.submit(inheritable_thread_target(_touched))
-        (
-            _mh_banded_of(base_g, "base", bands, width)
-            .repartition(n_buckets, "bkey")
-            .write.partitionBy("gen")
-            .bucketBy(n_buckets, "bkey")
-            .sortBy("bkey")
-            .option("path", idx)
-            .mode("overwrite")
-            .saveAsTable(tbl)
-        )
-        (
-            delta_banded.repartition(n_buckets, "bkey")
-            .write.partitionBy("gen")
-            .bucketBy(n_buckets, "bkey")
-            .sortBy("bkey")
-            .option("path", idx)
-            .mode("append")
-            .saveAsTable(tbl)
-        )
+        src.overwrite(_mh_banded_of(base_g, "base", bands, width))
+        src.append(delta_banded)
         touched = f_touched.result()
     touched_set = set(touched)
     bpat = re.compile(r"_(\d{5})(?:[._])")
     touched_files, untouched_base = [], []
-    for d in os.listdir(idx):
-        gd = os.path.join(idx, d)
-        if not d.startswith("gen=") or not os.path.isdir(gd):
-            continue
-        for f in os.listdir(gd):
-            if not f.endswith(".parquet"):
-                continue
-            m = bpat.search(f)
-            if not m:
-                raise RuntimeError(
-                    f"dedup_minhash_compact: cannot parse bucket id "
-                    f"from {f!r}"
-                )
-            if int(m.group(1)) in touched_set:
-                touched_files.append(os.path.join(gd, f))
-            elif d == "gen=base":
-                untouched_base.append(os.path.join(gd, f))
-            else:
-                raise RuntimeError(
-                    f"dedup_minhash_compact: delta file {f!r} in an "
-                    "untouched bucket — touched-set derivation is wrong"
-                )
+    for f in src.files():
+        gen = os.path.basename(os.path.dirname(f))
+        m = bpat.search(os.path.basename(f))
+        if not m:
+            raise RuntimeError(
+                f"dedup_minhash_compact: cannot parse bucket id from {f!r}"
+            )
+        if int(m.group(1)) in touched_set:
+            touched_files.append(f)
+        elif gen == "gen=base":
+            untouched_base.append(f)
+        else:
+            raise RuntimeError(
+                f"dedup_minhash_compact: delta file {f!r} in an "
+                "untouched bucket — touched-set derivation is wrong"
+            )
     # The fold: bucket-local group merge over ONLY the touched files.
     merged = (
         spark.read.parquet(*touched_files)
@@ -4527,18 +4164,9 @@ def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("gid", "minhash", "members", "bkey")
     )
-    spark.sql(f"DROP TABLE IF EXISTS {tblc}")
-    if os.path.isdir(idxc):
-        shutil.rmtree(idxc)
-    (
-        merged.repartition(n_buckets, "bkey")
-        .write.bucketBy(n_buckets, "bkey")
-        .sortBy("bkey")
-        .option("path", idxc)
-        .mode("overwrite")
-        .saveAsTable(tblc)
-    )
-    written = [f for f in os.listdir(idxc) if f.endswith(".parquet")]
+    cmp = BucketedIndex.per_call(spark, "mh_cmp", n_buckets, "bkey")
+    cmp.overwrite(merged)
+    written = cmp.files()
     if len(written) > len(touched):
         raise RuntimeError(
             f"dedup_minhash_compact: wrote {len(written)} files for "
@@ -4546,14 +4174,10 @@ def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket-bounded"
         )
     for p in untouched_base:
-        shutil.copy2(p, os.path.join(idxc, os.path.basename(p)))
-    spark.catalog.refreshTable(tblc)
+        shutil.copy2(p, os.path.join(cmp.path, os.path.basename(p)))
+    spark.catalog.refreshTable(cmp.name)
 
-    s2 = spark.newSession()  # shared catalog; own SQLConf for the probe
-    s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    tc = s2.table(tblc)
+    tc = cmp.probe(broadcast=False)
     est = (
         F.size(
             F.filter(
@@ -4672,8 +4296,8 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_ann_repartitioned built, inside ``foreachBatch``: collect the
     batch's queries (bounded: ≤ 5 rows), filter the index with a
     literal ``bucket IN (...)`` — BUCKET PRUNING is asserted per batch
-    (``SelectedBucketsCount`` in the executed scan plan; a regression
-    to a full scan raises mid-stream) — broadcast the queries for
+    (``BucketedIndex.pruned``; a regression to a full scan raises
+    mid-stream) — broadcast the queries for
     exact in-cell cosine top-3, and stage the batch's results to a
     per-batch_id parquet dir (idempotent under foreachBatch's
     at-least-once retries). The DuckDB oracle is the BATCH answer over
@@ -4696,10 +4320,8 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_conf(spark)
     _t_scaffold = _time.time()
-    tbl = _ann_index_ensure(spark, sf_dir)
-    s2 = spark.newSession()  # shared catalog; own SQLConf for the stream
-    s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    idx = s2.table(tbl)
+    index = _ann_index_ensure(spark, sf_dir)
+    idx = index.probe()
     qrows = sorted(
         idx.orderBy("vec_id").limit(10).select("vec_id", "bucket").collect(),
         key=lambda r: r["vec_id"],
@@ -4729,21 +4351,17 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         cells = sorted({r["bucket"] for r in rows})
         ids = [r["vec_id"] for r in rows]
-        cand = idx.filter(F.col("bucket").isin(cells))
-        scan_plan = cand._jdf.queryExecution().executedPlan().toString()
-        if "SelectedBucketsCount" not in scan_plan:
-            raise RuntimeError(
-                "streaming_ann_probe: bucket pruning did not engage for "
-                f"micro-batch {batch_id} — the key exists to PIN the "
-                "pruned-scan serving shape"
-            )
+        cand = index.pruned(
+            idx.filter(F.col("bucket").isin(cells)),
+            f"streaming_ann_probe micro-batch {batch_id}",
+        )
         _ann_cell_topk(idx, cand, ids, k=3).write.mode("overwrite").parquet(
             f"{out}/batch={batch_id}"
         )
 
     _t_drain = _time.time()
     stream = (
-        s2.readStream.schema("vec_id long, bucket int")
+        idx.sparkSession.readStream.schema("vec_id long, bucket int")
         .option("maxFilesPerTrigger", 1)
         .option("latestFirst", "false")
         .parquet(landing)
@@ -6549,7 +6167,7 @@ def dedup_cdc_incremental(
     """INCREMENTAL chunk-store ingest — dedup_cdc_chunks' delta twin
     and the actual production shape of CDC dedup (a backup / CAS chunk
     store ingesting a new batch): the corpus's chunk digests persist as
-    a digest-BUCKETED index table (bucketBy 16, the
+    a digest-BUCKETED index table (16 buckets, the
     dedup_minhash_incremental layout); a delta batch (doc_id % 3 == 0)
     chunks ITS OWN documents only, probes the store with one
     digest-grain join, and appends only the chunks the store has never
@@ -6569,52 +6187,29 @@ def dedup_cdc_incremental(
     only. Within-batch repeats of a new digest count once in
     chars_new (the store writes one copy), mirroring the per-lang
     distinct convention of dedup_cdc_chunks."""
-    import hashlib
-    import os
+    from ..session import ensure_conf, scratch_dir
 
-    ensure = __import__(
-        "flink_kmeans_spark.session", fromlist=["ensure_conf"]
-    ).ensure_conf
-    ensure(spark)
+    ensure_conf(spark)
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "text")
     ch = cdc_chunks(docs).localCheckpoint(eager=False)
-    base = ch.filter(F.col("doc_id") % 3 != 0).select("digest").distinct()
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8] + f"_{os.getpid()}"
-    tbl = f"cdc_inc_{tag}"
-    idx_path = index_dir(tbl)
-    _gc_stale_index_tags(spark, "cdc_inc_", tbl, min_age_s=3600)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    import shutil
-
-    shutil.rmtree(idx_path, ignore_errors=True)
-    # r12 (guide §6): one file per bucket — see _ann_inc_build
-    (
-        base.repartition(16, "digest")
-        .write.bucketBy(16, "digest")
-        .mode("overwrite")
-        .option("path", idx_path)
-        .saveAsTable(tbl)
-    )
+    store = BucketedIndex.per_call(spark, "cdc_inc", 16, "digest")
+    store.overwrite(ch.filter(F.col("doc_id") % 3 != 0).select("digest").distinct())
     if on_base_built is not None:
-        # test hook (the _mh_inc_build pattern): snapshot the base
-        # generation's files BETWEEN the two writes so immutability
-        # under the append is provable, not asserted on faith
-        on_base_built(idx_path)
+        # test hook: snapshot the base generation's files BETWEEN the
+        # two writes so immutability under the append is provable, not
+        # asserted on faith
+        on_base_built(store.path)
     # delta chunks land as FILES (the arrival boundary a real ingest
     # has), then a clone session with broadcast off probes the store —
     # forcing the >=100 TB plan where the bucketed index never
     # re-shuffles and only the delta crosses the wire
-    delta_path = f"{idx_path}_delta"
+    delta_path = scratch_dir("cdc_inc_delta")
     ch.filter(F.col("doc_id") % 3 == 0).select(
         "lang", "digest", "clen"
     ).write.mode("overwrite").parquet(delta_path)
-    s2 = spark.newSession()
-    s2.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    idx = s2.table(tbl).withColumn("known_flag", F.lit(1))
-    delta = s2.read.parquet(delta_path)
-    probe = delta.join(idx, "digest", "left").select(
+    stored = store.probe(broadcast=False).withColumn("known_flag", F.lit(1))
+    delta = stored.sparkSession.read.parquet(delta_path)
+    probe = delta.join(stored, "digest", "left").select(
         "lang",
         "digest",
         "clen",
@@ -6651,9 +6246,7 @@ def dedup_cdc_incremental(
     # the append a real store performs: new distinct digests, same
     # bucket spec -> new per-bucket files only (immutability of the
     # base files is pytest-pinned)
-    newu.select("digest").distinct().repartition(16, "digest").write.bucketBy(
-        16, "digest"
-    ).mode("append").option("path", idx_path).saveAsTable(tbl)
+    store.append(newu.select("digest").distinct())
     occ = flagged.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_chunks"),
         F.count(F.when(F.col("known"), 1)).cast("bigint").alias("n_known"),

@@ -107,7 +107,7 @@ def get_spark(app_name: str = "flink-kmeans-spark", shuffle_partitions: int | No
 
 
 # Engine state lives inside the repo (gitignored): ``.scratch/`` holds
-# per-call dirs, ``.index/`` holds persistent bucketed tables.
+# per-call dirs, ``.index/`` holds build-once bucketed tables.
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _SCRATCH_ROOT = os.path.join(_REPO_ROOT, ".scratch")
 _INDEX_ROOT = os.path.join(_REPO_ROOT, ".index")
@@ -142,10 +142,11 @@ def scratch_dir(prefix: str) -> str:
 
 
 def index_dir(tbl: str) -> str:
-    """Location of the persistent bucketed table ``tbl``: ``.index/<tbl>``.
+    """Location of the build-once bucketed table ``tbl``: ``.index/<tbl>``.
 
     Index dirs are never pruned (a catalog entry may outlive any one
-    call); callers GC superseded ones by their fingerprint tag."""
+    call); ``BucketedIndex`` drops a source's superseded fingerprints
+    when it builds a new one."""
     return os.path.join(_INDEX_ROOT, tbl)
 
 

@@ -97,6 +97,38 @@ def test_data_quality_checks_clean_then_corrupted(spark, sf_dir, tmp_path):
     }
 
 
+def test_join_bucket_colocated_follows_rewritten_source(spark, sf_oracle_dir, tmp_path):
+    """The bucketed copies are build-once per data fingerprint: after
+    orders.parquet is rewritten in place, the next call in the same
+    session must answer from the new data, not from the stale copy."""
+    for t in ("orders", "lineitem"):
+        shutil.copyfile(f"{sf_oracle_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+
+    def want():
+        o = pd.read_parquet(tmp_path / "orders.parquet")
+        l = pd.read_parquet(tmp_path / "lineitem.parquet")
+        g = o.merge(l, left_on="o_orderkey", right_on="l_orderkey").groupby(
+            "o_orderpriority"
+        )
+        return {p: (q, n) for (p, q), n in zip(g["l_quantity"].sum().items(), g.size())}
+
+    def check():
+        got = {
+            r["o_orderpriority"]: (r["sum_qty"], r["n"])
+            for r in _q("join_bucket_colocated")(spark, str(tmp_path)).collect()
+        }
+        exp = want()
+        assert got.keys() == exp.keys()
+        for p, (q, n) in exp.items():
+            assert got[p][1] == n and got[p][0] == pytest.approx(q, abs=0.006), p
+        return exp
+
+    before = check()
+    o = pd.read_parquet(tmp_path / "orders.parquet")
+    o[o.o_orderkey % 2 == 0].to_parquet(tmp_path / "orders.parquet", index=False)
+    assert check() != before
+
+
 def test_events_retention_offset_zero_is_full_cohort(spark, sf_dir):
     rows = _q("events_retention")(spark, sf_dir).collect()
     e = pd.read_parquet(f"{sf_dir}/events.parquet")

@@ -23,6 +23,36 @@ def emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
 
 
+def table_files(spark, name):
+    """Local paths of catalog table ``name``'s data files."""
+    import re
+
+    return sorted(
+        re.sub(r"^file:(//)?", "", f) for f in spark.table(name).inputFiles()
+    )
+
+
+def file_sigs(paths):
+    """(size, mtime) per file: a rewrite changes at least the mtime."""
+    import os
+
+    return {p: (os.path.getsize(p), os.path.getmtime(p)) for p in paths}
+
+
+def run_and_find_tables(spark, run, *prefixes):
+    """Run ``run()`` and return its result plus, per prefix, the one
+    catalog table named ``<prefix>*`` that the run created."""
+    before = {t.name for t in spark.catalog.listTables()}
+    out = run()
+    added = [t.name for t in spark.catalog.listTables() if t.name not in before]
+    found = []
+    for prefix in prefixes:
+        match = [n for n in added if n.startswith(prefix)]
+        assert len(match) == 1, (prefix, added)
+        found.append(match[0])
+    return (out, *found)
+
+
 def exact_jaccard_pairs(spark, docs, threshold):
     """Exact 3-gram Jaccard over ALL pairs, computed in pandas."""
     pdf = docs.select("doc_id", "text").toPandas()
@@ -789,71 +819,42 @@ def test_sim_ann_incremental_delta_files_and_participation(spark, sf_dir):
     (b) surface delta rows (vec_id % 10 == 0) as probe neighbors, and
     (c) produce exactly the full-rebuild answer (the DuckDB gate pins
     the values; here we pin the INGEST mechanICS the gate can't see)."""
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    idx_path = os.path.join(repo_root, ".index", f"ann_inc_{tag}")
-
-    # Snapshot the base generation BETWEEN the two writes via the build
-    # hook (ADVICE r7: capturing mtimes after both writes made the
-    # untouched-base assertion vacuous).
-    base_snapshot = {}
-
-    def snap(path):
-        base_snapshot.update(
-            {
-                f: (os.path.getsize(os.path.join(path, f)),
-                    os.path.getmtime(os.path.join(path, f)))
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            }
-        )
+    import re
 
     import flink_kmeans_spark.plans.llm as llm_mod
-    from flink_kmeans_spark.functions.vectors import l2norm
-    from pyspark.sql import functions as F
+    from flink_kmeans_spark.operators.bucketed import BucketedIndex
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    v = F.col("embedding").cast("array<double>")
-    cell = sum(
-        (F.when(v.getItem(i) > 0, F.lit(1 << i)).otherwise(F.lit(0)))
-        for i in range(8)
-    )
-    indexed = e.select(
-        "vec_id", "embedding", cell.alias("bucket"), l2norm(v).alias("nrm")
-    )
-    llm_mod._ann_inc_build(spark, indexed, f"ann_inc_{tag}", idx_path,
-                           on_base_written=snap)
+    indexed = llm_mod._ann_indexed(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    index = BucketedIndex.per_call(spark, "test_ann_inc", 16, "bucket")
+    index.overwrite(indexed.filter(F.col("vec_id") % 10 != 0))
+    # snapshot the base generation BETWEEN the two writes: after both,
+    # an untouched-base assertion would be vacuous
+    base_snapshot = file_sigs(table_files(spark, index.name))
+    index.append(indexed.filter(F.col("vec_id") % 10 == 0))
     assert base_snapshot, "base generation wrote no parquet files"
-    after = {
-        f: (os.path.getsize(os.path.join(idx_path, f)),
-            os.path.getmtime(os.path.join(idx_path, f)))
-        for f in os.listdir(idx_path)
-        if f.endswith(".parquet")
-    }
+    after = file_sigs(table_files(spark, index.name))
     # (a) every base file survives the append byte-for-byte (size+mtime)
     for f, sig in base_snapshot.items():
-        assert f in after and after[f] == sig, f"base file {f} was rewritten"
+        assert after.get(f) == sig, f"base file {f} was rewritten"
     # and the append added NEW per-bucket files on top
     assert len(after) > len(base_snapshot)
 
-    rows = specs()["sim_ann_incremental"].fn(spark, sf_dir).collect()
-    files = sorted(
-        f for f in os.listdir(idx_path) if f.endswith(".parquet")
+    run = specs()["sim_ann_incremental"].fn
+    rows, tbl = run_and_find_tables(
+        spark, lambda: run(spark, sf_dir).collect(), "ann_inc_"
     )
-    # overwrite wrote one generation, append a second: more files than
-    # buckets touched by one write alone, and every file parses the
-    # _NNNNN.cNNN bucket naming Spark uses for bucketed tables.
-    assert len(files) > 16 / 2  # at least some buckets have 2 generations
+    files = table_files(spark, tbl)
+    # the key's own table: every file carries Spark's _NNNNN bucket id,
+    # and overwrite plus append left two generations in some bucket
+    buckets = [int(re.search(r"_(\d{5})\.c\d{3}", f).group(1)) for f in files]
+    assert len(files) > len(set(buckets)), files
     # rows: per-query top-3 over the merged index
     assert all(r["rk"] in (1, 2, 3) for r in rows)
     phases = {r["phase"] for r in rows}
     assert phases <= {"base", "delta"}
     assert "delta" in phases, "delta rows never surfaced as neighbors"
     # re-running the key rebuilds from scratch (its documented contract)
-    rows2 = specs()["sim_ann_incremental"].fn(spark, sf_dir).collect()
+    rows2 = run(spark, sf_dir).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))
 
 
@@ -946,80 +947,24 @@ def test_dedup_minhash_incremental_mechanics(spark, sf_dir):
         "no delta doc ever appeared in a pair — equality is vacuous"
     )
 
-    # base-generation immutability via the build hook
-    import hashlib
-    import os
-
+    # base-generation immutability: snapshot between the two writes
     import flink_kmeans_spark.plans.llm as llm_mod
-    from pyspark.sql import functions as F
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    idx_path = os.path.join(repo_root, ".index", f"mh_inc_{tag}")
-    snapshot = {}
-
-    def walk_sig(path):
-        return {
-            os.path.join(dp, f): (os.path.getsize(os.path.join(dp, f)),
-                                  os.path.getmtime(os.path.join(dp, f)))
-            for dp, _, names in os.walk(path)
-            for f in names
-            if f.endswith(".parquet")
-        }
-
-    def snap(path):
-        snapshot.update(walk_sig(path))
-
+    from flink_kmeans_spark.operators.bucketed import BucketedIndex
     from flink_kmeans_spark.operators.dedup import minhash_signatures
 
     sigs = minhash_signatures(
         spark.read.parquet(f"{sf_dir}/documents.parquet"), num_hashes=32
     )
-
-    def groups_of(part):
-        return part.groupBy("minhash").agg(
-            F.array_sort(F.collect_list("doc_id")).alias("members")
-        )
-
-    def banded_of(groups, gen):
-        width = 4
-        return groups.select(
-            F.col("members").getItem(0).alias("gid"),
-            "minhash",
-            "members",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(7)),
-                    lambda b: F.concat(
-                        b.cast("string"),
-                        F.lit("|"),
-                        F.array_join(
-                            F.transform(
-                                F.slice(F.col("minhash"), b * width + 1, width),
-                                lambda x: x.cast("string"),
-                            ),
-                            ",",
-                        ),
-                    ),
-                )
-            ).alias("bkey"),
-            F.lit(gen).alias("gen"),
-        )
-
-    base_g = groups_of(sigs.filter(F.col("doc_id") % 10 != 0))
-    delta_g = groups_of(sigs.filter(F.col("doc_id") % 10 == 0))
-    llm_mod._mh_inc_build(
-        spark,
-        banded_of(base_g, "base"),
-        banded_of(delta_g, "delta"),
-        f"mh_inc_{tag}",
-        idx_path,
-        on_base_written=snap,
-    )
+    base_g = llm_mod._mh_groups_of(sigs.filter(F.col("doc_id") % 10 != 0))
+    delta_g = llm_mod._mh_groups_of(sigs.filter(F.col("doc_id") % 10 == 0))
+    index = BucketedIndex.per_call(spark, "test_mh_inc", 16, "bkey", "gen")
+    index.overwrite(llm_mod._mh_banded_of(base_g, "base", 8, 4))
+    snapshot = file_sigs(table_files(spark, index.name))
+    index.append(llm_mod._mh_banded_of(delta_g, "delta", 8, 4))
     assert snapshot, "base generation wrote no parquet files"
-    after = walk_sig(idx_path)
+    after = file_sigs(table_files(spark, index.name))
     for f, sig in snapshot.items():
-        assert f in after and after[f] == sig, f"base file {f} was rewritten"
+        assert after.get(f) == sig, f"base file {f} was rewritten"
     assert len(after) > len(snapshot), "delta appended no new files"
 
 
@@ -1404,44 +1349,33 @@ def test_dedup_minhash_compact_mechanics(spark, sf_dir):
     (no rewrite), Spark-written file count ≤ touched buckets (the
     in-operator assert), and the compacted pairs equal the
     full-recompute dedup_minhash answer."""
-    import glob
     import hashlib
     import os
 
-    rows = specs()["dedup_minhash_compact"].fn(spark, sf_dir).collect()
+    rows, src_tbl, cmp_tbl = run_and_find_tables(
+        spark,
+        lambda: specs()["dedup_minhash_compact"].fn(spark, sf_dir).collect(),
+        "mh_cmpsrc_",
+        "mh_cmp_",
+    )
     got = {(r["id_a"], r["id_b"], round(r["jaccard_est"], 6)) for r in rows}
     want_rows = specs()["dedup_minhash"].fn(spark, sf_dir).collect()
     want = {
         (r["id_a"], r["id_b"], round(r["jaccard_est"], 6)) for r in want_rows
     }
     assert got == want
-    idx_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".index"
-    )
-    src = max(
-        glob.glob(os.path.join(idx_root, "mh_cmpsrc_*")), key=os.path.getmtime
-    )
-    cmp_dir = max(
-        glob.glob(os.path.join(idx_root, "mh_cmp_*")), key=os.path.getmtime
-    )
 
     def md5_of(path):
         return hashlib.md5(open(path, "rb").read()).hexdigest()
 
-    cmp_files = {
-        f: md5_of(os.path.join(cmp_dir, f))
-        for f in os.listdir(cmp_dir)
-        if f.endswith(".parquet")
-    }
-    base_dir = os.path.join(src, "gen=base")
+    cmp_files = {os.path.basename(f): md5_of(f) for f in table_files(spark, cmp_tbl)}
     carried = 0
-    for f in os.listdir(base_dir):
-        if not f.endswith(".parquet"):
+    for f in table_files(spark, src_tbl):
+        if "/gen=base/" not in f:
             continue
-        if f in cmp_files:  # carried file keeps its basename
-            assert cmp_files[f] == md5_of(os.path.join(base_dir, f)), (
-                "carried base file was rewritten"
-            )
+        name = os.path.basename(f)
+        if name in cmp_files:  # carried file keeps its basename
+            assert cmp_files[name] == md5_of(f), "carried base file was rewritten"
             carried += 1
     assert carried > 0, (
         "no untouched base bucket file was carried — either every "

@@ -723,3 +723,23 @@ def test_on_disk_state_has_one_owner():
         if owned.search(line)
     ]
     assert offenders == []
+
+
+def test_bucketed_tables_have_one_owner():
+    """Only operators/bucketed.py may write a bucketed table, clone a
+    probe session for one or check its bucket pruning; every other
+    module goes through BucketedIndex."""
+    import pathlib
+
+    import flink_kmeans_spark
+
+    pkg = pathlib.Path(flink_kmeans_spark.__file__).parent
+    owned = re.compile(r"saveAsTable\(|\.bucketBy\(|autoBucketedScan|SelectedBucketsCount")
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "operators" / "bucketed.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if owned.search(line)
+    ]
+    assert offenders == []
