@@ -262,23 +262,24 @@ def main() -> None:
     queries = QUERIES()
 
     timings: dict[str, float] = {}
-    # Cold (first-run) wall per key alongside the steady-state best
-    # (VERDICT r10 item 5): a real cluster DOES pay the cold path on
+    # Cold (first-run) wall per key alongside the steady-state best:
+    # a real cluster DOES pay the cold path on
     # its first query after deploy — recording both keeps cold-path
     # regressions visible instead of minimized away by best-of-N.
     cold: dict[str, float] = {}
-    # Host-load fingerprint (VERDICT r9 item 8): record 1-min loadavg at
-    # each key's sample time so a future regression separates "the code
-    # got slower" from "the box was busy" without re-runs (r9's artifact
-    # needed a merged third pass because the host ran ~1.4x slow all day).
-    # ADVICE r10: sampling only BEFORE each sub-second run mostly
-    # measured the previous keys' load — sample after each run too, and
+    # Host-load fingerprint: record 1-min loadavg at each key's sample
+    # time so a future regression separates "the code got slower" from
+    # "the box was busy" without re-runs. Sampling only BEFORE each
+    # sub-second run mostly measured the previous keys' load — sample
+    # after each run too, and
     # bracket the whole suite with pre/post loadavg so suite-level
     # contention is distinguishable from key-level.
     load_at: dict[str, float] = {}
     load_pre_suite = round(os.getloadavg()[0], 2)
 
     def timed(key, fn, runs):
+        """Time ``runs`` passes of ``fn`` and return this attempt's own
+        best; ``timings[key]`` keeps the min over every attempt."""
         best, first, load = float("inf"), None, os.getloadavg()[0]
         for _ in range(runs):
             t0 = time.time()
@@ -300,8 +301,9 @@ def main() -> None:
             f"(cold {cold[key]:.3f}s, load {load:.1f})",
             file=sys.stderr, flush=True,
         )
+        return round(best, 4)
 
-    # r12 gate defense (a): don't start the suite under external load —
+    # gate defense (a): don't start the suite under external load —
     # nothing of ours is running yet, so loadavg here is all contention.
     gate_wait_s = 0.0
     while os.getloadavg()[0] > GATE_LOAD_MAX and gate_wait_s < GATE_WAIT_CAP_S:
@@ -311,26 +313,27 @@ def main() -> None:
 
     for key in HEADLINE:
         runs = GATED_RUNS if key in GATED else RUNS
-        timed(key, queries[key], runs)
-        # r12 gate defense (b): bar missed under elevated load → bounded
-        # re-runs with cooldown; every sample lands in the artifact.
+        best = timed(key, queries[key], runs)
+        # gate defense (b): bar missed under elevated load → bounded
+        # re-runs with cooldown; every attempt's own sample lands in the
+        # artifact.
         bar = GATED_BARS.get(key)
         if bar is not None and timings[key] > bar and load_at[key] > GATE_LOAD_MAX:
-            samples = [{"best": timings[key], "load": load_at[key]}]
+            samples = [{"best": best, "load": load_at[key]}]
             for _ in range(GATE_RETRIES):
                 time.sleep(10)
-                timed(key, queries[key], runs)
-                samples.append({"best": timings[key], "load": load_at[key]})
+                best = timed(key, queries[key], runs)
+                samples.append({"best": best, "load": load_at[key]})
                 if timings[key] <= bar or load_at[key] <= GATE_LOAD_MAX:
                     break
             gate_retries[key] = samples
 
-    # Long tail (VERDICT r10 item 4): every registry key not in the
+    # Long tail: every registry key not in the
     # curated headline set gets ONE pass, so the artifact carries a
     # wall for all registered keys — no family is bench-invisible.
     # Opt-out via SPARK_GRAFT_BENCH_TAIL=0 for quick iteration.
     #
-    # r12 stall defense (measured, not hypothetical: one quiet-box
+    # stall defense (measured, not hypothetical: one quiet-box
     # suite recorded graph_components_star at 36.7 s in-suite vs 4.97 s
     # isolated minutes later — a host I/O stall window also inflated
     # its neighbors 3–9×): a tail key whose single pass exceeds
@@ -342,13 +345,13 @@ def main() -> None:
     tail_keys = [k for k in queries if k not in set(HEADLINE)]
     if os.environ.get("SPARK_GRAFT_BENCH_TAIL", "1") != "0":
         for key in tail_keys:
-            timed(key, queries[key], 1)
-            if timings[key] > TAIL_RETRY_SEC:
-                first_sample = {"best": timings[key], "load": load_at[key]}
-                timed(key, queries[key], 1)
+            first = timed(key, queries[key], 1)
+            if first > TAIL_RETRY_SEC:
+                first_sample = {"best": first, "load": load_at[key]}
+                second = timed(key, queries[key], 1)
                 tail_retries[key] = [
                     first_sample,
-                    {"best": timings[key], "load": load_at[key]},
+                    {"best": second, "load": load_at[key]},
                 ]
 
     load_post_suite = round(os.getloadavg()[0], 2)

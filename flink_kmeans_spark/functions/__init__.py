@@ -1,1 +1,1 @@
-from .vectors import sqdist, dot, l2norm, cosine_sim, centroids_literal  # noqa: F401
+from .vectors import sqdist, dot, l2norm, cosine_sim  # noqa: F401

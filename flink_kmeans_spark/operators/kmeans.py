@@ -45,7 +45,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import centroids_literal, sqdist
+from ..functions.vectors import sqdist
 
 Centroids = list[tuple[int, list[float]]]
 
@@ -61,20 +61,6 @@ def init_centroids(points: DataFrame, k: int, id_col: str = "vec_id", vec_col: s
         .collect()
     )
     return [(i, list(r["v"])) for i, r in enumerate(rows)]
-
-
-def nearest_centroid(vec: Column, cents: Centroids) -> Column:
-    """struct(dist, cid) of the nearest centroid — a pure map expression
-    over an inline centroid literal. Used for one-shot assigns; the
-    iteration loop uses :func:`assign`'s broadcast-parameter form so the
-    physical plan (and its generated code) is identical every step."""
-    cents_col = centroids_literal(cents)
-    return F.array_min(
-        F.transform(
-            cents_col,
-            lambda c: F.struct(sqdist(vec, c["cvec"]).alias("dist"), c["cid"].alias("cid")),
-        )
-    )
 
 
 def assign(points: DataFrame, cents: Centroids, vec_col: str = "embedding") -> DataFrame:

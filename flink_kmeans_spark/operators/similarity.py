@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine_sim, dot, l2norm
+from ..session import overlap
 
 
 def cosine_topk_bruteforce(
@@ -145,33 +146,14 @@ def ivf_topk(
     # transfer even when the input is huge, then the length check fires.
     MAX_QUERIES = 10_000
 
-    # r12 (guide §2.6): the bounded query collect shares no inputs with
-    # the coarse-quantizer fit — run the two job chains from a 2-thread
-    # pool so the collect overlaps the fit's iteration jobs (the hnsw
-    # entry-chain overlap pattern); deterministic either way.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_model = pool.submit(
-            inheritable_thread_target(
-                lambda: fit(
-                    corpus, k=n_clusters, n_iter=5, id_col=id_col, vec_col=vec_col
-                )
-            )
-        )
-        f_q = pool.submit(
-            inheritable_thread_target(
-                lambda: queries.select(
-                    id_col, F.col(vec_col).cast("array<double>")
-                )
-                .limit(MAX_QUERIES + 1)
-                .collect()
-            )
-        )
-        model = f_model.result()
-        q_rows = f_q.result()
+    # the bounded query collect shares no inputs with the coarse-quantizer
+    # fit, so it overlaps the fit's iteration jobs; deterministic either way
+    model, q_rows = overlap(
+        lambda: fit(corpus, k=n_clusters, n_iter=5, id_col=id_col, vec_col=vec_col),
+        lambda: queries.select(id_col, F.col(vec_col).cast("array<double>"))
+        .limit(MAX_QUERIES + 1)
+        .collect(),
+    )
     cells = assign_arrow(corpus, model.centroids, id_col, vec_col).select(
         id_col, F.col("cid").alias("cell")
     )
@@ -696,8 +678,8 @@ def hnsw_lite_topk(
        NEIGHBOR WINDOW inside each bucket (each member pairs with its
        next ``window`` successors in xxhash64(id) order), so pair count
        is EXACTLY n·bands·window whatever the bucket skew — the
-       quadratic within-bucket self-join failure mode (dedup r7 catch
-       #7) is structurally impossible, not just unlikely.
+       quadratic within-bucket self-join failure mode is structurally
+       impossible, not just unlikely.
     2. One NN-Descent round (Dong et al., WWW 2011): neighbors-of-
        neighbors (n·m² candidates, linear) rescored and merged, which
        repairs the deliberately-weak LSH start — the reason a crude
@@ -727,12 +709,16 @@ def hnsw_lite_topk(
     from .kmeans import assign_arrow, fit
 
     if rounds < 1:
-        # ADVICE r11: with rounds=0 the loop never adds the rk column
+        # with rounds=0 the loop never adds the rk column
         # the final cut selects — fail with a clear contract error
         # instead of an AnalysisException deep inside the plan.
         raise ValueError("hnsw_lite_topk requires rounds >= 1")
 
     spark = corpus.sparkSession
+    # lazy although both overlapped chains below read cu: the block
+    # manager's first-writer-wins lock computes each partition once while
+    # the other thread's task waits, and an eager checkpoint before the
+    # fork measured slower (one more job on the critical path)
     cu = _with_norm_unit(corpus, id_col, vec_col, "n").localCheckpoint(
         eager=False
     )
@@ -740,7 +726,7 @@ def hnsw_lite_topk(
     def _pairs0() -> DataFrame:
         # count → bits → banded sketch → window pairs; lives inside the
         # edge-build chain so the metadata count() job overlaps the
-        # entry-layer chain too (r12, guide §2.6)
+        # entry-layer chain too
         n = cu.count()
         bits = min(16, max(4, int(math.log2(max(n, 64) / 32))))
 
@@ -804,9 +790,8 @@ def hnsw_lite_topk(
     def _score(pairs: DataFrame) -> DataFrame:
         """(a, b) id pairs → (a, b, cosine) via two unit-table joins.
 
-        r11 (guide §2.5 post-shuffle parallelism): the pair rows are
-        skinny (two longs), so AQE byte-coalescing collapses the
-        upstream exchange to ~1 partition and the O(pairs·d) dot fold
+        The pair rows are skinny (two longs), so AQE byte-coalescing
+        collapses the upstream exchange to ~1 partition and the O(pairs·d) dot fold
         — invisible to the byte advisory — goes single-core. An
         explicit a-keyed repartition at defaultParallelism pins the
         scoring stage to the core count; same pairs, same fold,
@@ -869,26 +854,19 @@ def hnsw_lite_topk(
             .localCheckpoint(eager=True)
         )
 
-    # --- base graph and entry layer built CONCURRENTLY (guide §2.6):
+    # --- base graph and entry layer built CONCURRENTLY:
     # the proximity-graph build (metadata count → banded sketch →
     # window pairs → score → NN-Descent round, two eager edge
     # checkpoints) and the ENTIRE entry-layer chain (coarse K-Means fit
     # → cell assignment → query collect → entry-beam checkpoint) share
-    # no inputs beyond the already-materialized cu/corpus scans, and
+    # no inputs beyond the cu checkpoint and the corpus scan, and
     # each is a chain of small jobs whose cost on the toy fixture is
-    # per-job scheduling latency (~0.2 s/job on this box — measured on
-    # a bare 1-task cached count). r11 overlapped only the fit; r12
-    # (VERDICT r11 item 3) moves the whole entry chain into the second
-    # thread so the two eager edge checkpoints overlap the entry-beam
-    # computation too. Each chain is internally sequential and
+    # per-job scheduling latency (~0.2 s/job on a 4-core box, measured
+    # on a bare 1-task cached count). The whole entry chain runs in the
+    # second thread, so the two eager edge checkpoints overlap the
+    # entry-beam computation too. Each chain is internally sequential and
     # deterministic, so results are bit-identical to the serial build.
     # On a real cluster the same overlap back-fills straggler tails.
-    # (Note: bare `inheritable_thread_target` is the classic-PySpark
-    # signature; Spark Connect would need the session-argument form.)
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     wq = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
 
     def _entry_beam():
@@ -940,11 +918,7 @@ def hnsw_lite_topk(
         )
         return qv_df, beam0
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_edges = pool.submit(inheritable_thread_target(_build_edges))
-        f_entry = pool.submit(inheritable_thread_target(_entry_beam))
-        edges = f_edges.result()
-        qvecs, cur = f_entry.result()
+    edges, (qvecs, cur) = overlap(_build_edges, _entry_beam)
 
     # --- fixed-round beam expansion over the edge list ---
     for r in range(rounds):
@@ -977,7 +951,7 @@ def hnsw_lite_topk(
                 .localCheckpoint(eager=True)
             )
 
-    # r11 (guide §2.4): the LAST round's beam is consumed exactly once,
+    # The LAST round's beam is consumed exactly once,
     # by the final top-k cut — so its eager checkpoint job and the
     # second row_number pass over the same (cosine desc, n_id) order
     # are pure overhead. rk ≤ beam then re-rank ≤ k over one ordering

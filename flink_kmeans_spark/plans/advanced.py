@@ -4550,9 +4550,9 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (initialOffset → read(start) → nextOffset), replay
     (readBetweenOffsets — exactly-once on failure), and a bounded
     deterministic sequence drained across FOUR real micro-batches with
-    processAllAvailable (availableNow snapshots only the first simple-
-    reader batch — measured, hence the drain choice). The streamed
-    rows land in a memory sink and are re-aggregated batch-side; the
+    processAllAvailable (an available-now trigger snapshots only the
+    first simple-reader batch — measured, hence the drain choice). The
+    streamed rows land in a memory sink and are re-aggregated batch-side; the
     oracle recomputes the closed form, so offset bookkeeping bugs
     (dropped/duplicated batches) break the hash.
 
@@ -4647,7 +4647,7 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CDC apply — the online twin of ``cdc_merge_apply``:
     a change feed ARRIVES as three ordered micro-batches (deletes,
     then updates, then inserts — strictly increasing landing mtimes,
-    maxFilesPerTrigger=1) and ``foreachBatch`` MERGEs each batch into
+    one file per trigger) and ``foreachBatch`` MERGEs each batch into
     a keyed state table as a GENERATION CHAIN: batch b reads
     generation b-1 (or the initial snapshot) and overwrites generation
     b, so a retried batch recomputes from the SAME input generation —
@@ -4666,13 +4666,13 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched partitions). State never crosses the driver; the final
     read aggregates the last generation only."""
     import os
-    import time as _time
+    import time
 
-    from ..session import PHASE_WALLS, ensure_conf
-    from ..streaming.jobs import stage_arrivals
+    from ..session import ensure_conf
+    from ..streaming.jobs import arrivals, drain, stage_arrivals
 
     ensure_conf(spark)
-    _t_scaffold = _time.time()
+    t0 = time.time()
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -4745,31 +4745,8 @@ def streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(state, f"gen={batch_id}")
         )
 
-    schema = changes.schema
-    _t_drain = _time.time()
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(landing)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 120))
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming_cdc_apply did not drain change batches in {timeout_sec}s"
-        )
-    q.stop()
-    PHASE_WALLS["streaming_cdc_apply"] = {
-        "scaffold_s": round(_t_drain - _t_scaffold, 3),
-        "drain_s": round(_time.time() - _t_drain, 3),
-    }
+    stream = arrivals(spark, changes.schema, landing)
+    drain(stream.writeStream.foreachBatch(apply), ckpt, "streaming_cdc_apply", t0)
     gens = sorted(
         int(d.split("=")[1])
         for d in os.listdir(state)

@@ -835,6 +835,16 @@ def events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Runtime bloom-filter injection on, and broadcast off so the shuffle-join
+# shape the filter targets actually materializes at test scale.
+_BLOOM_CONFS = {
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10GB",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
 @register(
     "join_bloom_pruned",
     oracle="""
@@ -856,49 +866,17 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-verifiable against the plain-join oracle.
 
     The bloom confs are session-scoped, so the aggregate (a few rows)
-    is materialized eagerly under a try/finally that restores every
+    is materialized eagerly inside a conf_scope that restores every
     conf — the returned frame is plan-stable and later actions replay
     nothing under mutated settings. Broadcast is disabled only INSIDE
     the scope, to force the shuffle-join shape the filter targets
     (with broadcast available Spark would rightly just broadcast).
     tests/test_plans.py pins might_contain in the pre-materialization
     physical plan."""
-    with _bloom_filter_confs(spark):
+    from ..session import conf_scope
+
+    with conf_scope(spark, _BLOOM_CONFS):
         return _bloom_pruned_agg(spark, sf_dir).localCheckpoint(eager=True)
-
-
-class _bloom_filter_confs:
-    """Scoped session confs enabling runtime bloom-filter injection
-    (and disabling broadcast so the shuffle-join shape the filter
-    targets actually materializes at test scale)."""
-
-    CONFS = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10GB",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.saved: dict[str, str | None] = {}
-
-    def __enter__(self):
-        for k, v in self.CONFS.items():
-            try:
-                self.saved[k] = self.spark.conf.get(k)
-            except Exception:
-                self.saved[k] = None
-            self.spark.conf.set(k, v)
-        return self
-
-    def __exit__(self, *exc):
-        for k, v in self.saved.items():
-            if v is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, v)
-        return False
 
 
 def _bloom_pruned_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3276,13 +3254,13 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-grain merge) decomposed through foreachBatch exactly like
     streaming_minhash_dedup (plans/llm.py)."""
     import os
-    import time as _time
+    import time
 
-    from ..session import PHASE_WALLS, ensure_conf, scratch_dir
-    from ..streaming.jobs import stage_arrivals
+    from ..session import ensure_conf, scratch_dir
+    from ..streaming.jobs import arrivals, drain, stage_arrivals
 
     ensure_conf(spark)
-    _t_scaffold = _time.time()
+    t0 = time.time()
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", F.col("l_extendedprice").cast("double").alias("x")
     )
@@ -3291,44 +3269,21 @@ def streaming_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing = os.path.join(root, "landing")
     ledger = os.path.join(root, "ledger")
     ckpt = os.path.join(root, "ckpt")
-    # three ordered arrival shards, so maxFilesPerTrigger=1 drains them
-    # as three micro-batches
+    # three ordered arrival shards, drained as three micro-batches
     stage_arrivals(
         li.withColumn("shard", F.pmod(F.col("l_orderkey"), F.lit(3))),
         "shard",
         3,
         landing,
     )
-    _t_drain = _time.time()
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         _dds_buckets(batch_df.select("x")).write.mode("overwrite").parquet(
             f"{ledger}/batch={batch_id}"
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(landing)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 120))
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming_quantile_sketch did not drain shards in {timeout_sec}s"
-        )
-    q.stop()
-    PHASE_WALLS["streaming_quantile_sketch"] = {
-        "scaffold_s": round(_t_drain - _t_scaffold, 3),
-        "drain_s": round(_time.time() - _t_drain, 3),
-    }
+    stream = arrivals(spark, schema, landing)
+    drain(stream.writeStream.foreachBatch(fold), ckpt, "streaming_quantile_sketch", t0)
     led = spark.read.option("recursiveFileLookup", "true").parquet(ledger)
     merged = led.groupBy("bucket").agg(F.sum("c").alias("c"))
     return _dds_quantiles(spark, merged)

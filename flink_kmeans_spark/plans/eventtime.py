@@ -86,7 +86,7 @@ def _drain(df, prefix: str):
 
     _STREAM_RUN[0] += 1
     # complete-mode aggregations: the no-data batch re-emits the same
-    # full aggregate — skip it (see _no_data_batches_disabled)
+    # full aggregate — skip it (see _NO_DATA_BATCH_OFF in streaming/jobs.py)
     return run_available_now(
         df, f"{prefix}_{_STREAM_RUN[0]}", skip_no_data_batch=True
     )
@@ -106,8 +106,8 @@ def _drain(df, prefix: str):
 def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STRUCTURED STREAMING path, oracled: file-source stream over the
     same events parquet, watermarked 10-min tumbling counts, drained
-    with the availableNow trigger into a memory sink — the streamed
-    result must equal the batch SQL exactly (streaming/jobs.py)."""
+    to completion (streaming/jobs.py ``drain``) — the streamed result
+    must equal the batch SQL exactly."""
     from ..streaming.jobs import streaming_tumbling_counts
 
     return _drain(streaming_tumbling_counts(spark, sf_dir), "q_tumbling")
@@ -125,7 +125,7 @@ def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "events"),
 )
 def streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming sliding windows drained via availableNow; must equal
+    """Streaming sliding windows drained to completion; must equal
     the batch 2-offset expansion SQL."""
     from ..streaming.jobs import streaming_sliding_counts
 
@@ -200,10 +200,10 @@ def streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "events"),
 )
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DYNAMIC-GAP session windows in a streaming query (VERDICT r4
-    item 5): native ``F.session_window`` whose gap is a per-event
-    COLUMN — purchases extend the session 30 min, other events 15 min —
-    drained with availableNow. The oracle is the classic interval-merge
+    """DYNAMIC-GAP session windows in a streaming query: native
+    ``F.session_window`` whose gap is a per-event COLUMN — purchases
+    extend the session 30 min, other events 15 min — drained to
+    completion. The oracle is the classic interval-merge
     SQL (cumulative MAX of ts+gap over the per-user event order; a new
     session starts when an event lands at-or-after every previous
     event's reach), which is exactly Spark's merge rule for overlapping
@@ -233,7 +233,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """applyInPandasWithState custom stateful operator: after draining
     the whole file stream, each user's final state row must equal the
-    batch GROUP BY — the state-accumulation oracle. (availableNow may
+    batch GROUP BY — the state-accumulation oracle. (The drain may
     deliver several micro-batches; update-mode emits one row per user
     per batch, so the LAST row per user is the final state.)"""
     from pyspark.sql.window import Window
@@ -320,7 +320,7 @@ def streaming_static_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream event-time-bounded inner join (signup⋈purchase
-    attribution), drained via availableNow in append mode — the drained
+    attribution), drained to completion in append mode — the drained
     pairs must equal the batch theta-join SQL exactly. The watermark +
     time bound make both join buffers finite (streaming/jobs.py)."""
     from ..streaming.jobs import run_available_now, streaming_stream_stream_join
@@ -563,7 +563,7 @@ def streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     wins latest value — the idempotent upsert recipe for sinks with no
     native streaming writer. The drained merge must equal the batch
     GROUP BY + argmax on the same events (oracle), regardless of how
-    availableNow split the micro-batches."""
+    the drain split the micro-batches."""
     from ..streaming.jobs import run_foreach_batch_upsert
 
     return run_foreach_batch_upsert(spark, sf_dir)
@@ -578,7 +578,7 @@ def streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "events"),
 )
 def streaming_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Checkpoint-resume exactly-once: two availableNow drains over a
+    """Checkpoint-resume exactly-once: two drains over a
     growing landing directory share one checkpoint + parquet sink; the
     resumed query processes only the new arrival. The sink must equal
     the source EXACTLY (identity oracle) — any reprocessing shows as

@@ -2237,8 +2237,8 @@ def pipeline_media_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of multimodal_decode: the identical Arrow
-    encode/decode kernels over a readStream file source, drained with
-    availableNow — streamed decode must hash-equal the batch formulas
+    encode/decode kernels over a readStream file source, drained to
+    completion — streamed decode must hash-equal the batch formulas
     (stateless Python stages are engine-verified to compose under
     Structured Streaming)."""
     from ..streaming import jobs as SJ
@@ -4037,10 +4037,10 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "incremental"),
 )
 def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPACTION twin of dedup_minhash_incremental (VERDICT r8 item
-    10b): fold N = 3 delta generations of the band-bucketed MinHash
-    signature table back into ONE base generation WITHOUT rescanning
-    the corpus beyond the touched buckets. The compaction job's input
+    """COMPACTION twin of dedup_minhash_incremental: fold N = 3 delta
+    generations of the band-bucketed MinHash signature table back into
+    ONE base generation WITHOUT rescanning the corpus beyond the touched
+    buckets. The compaction job's input
     is the touched buckets' part-FILES only (files are selected by the
     bucket id encoded in their names — the same file-level pruning a
     lakehouse compactor does); untouched base bucket files are carried
@@ -4074,6 +4074,7 @@ def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from ..operators.dedup import minhash_signatures
+    from ..session import overlap
 
     # 64 buckets and a ~2% delta so untouched buckets EXIST at gate
     # scale and the file-carry path is actually exercised (with a 16
@@ -4082,6 +4083,8 @@ def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fraction tracks the delta fraction).
     num_hashes, bands, n_buckets = 32, 8, 64
     width = num_hashes // bands
+    # lazy although the base write and the touched-bucket collect below
+    # both read sigs from two threads: see hnsw_lite_topk's cu for why
     sigs = minhash_signatures(
         _docs(spark, sf_dir), num_hashes=num_hashes
     ).localCheckpoint(eager=False)
@@ -4124,15 +4127,11 @@ def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_touched = pool.submit(inheritable_thread_target(_touched))
+    def _write() -> None:
         src.overwrite(_mh_banded_of(base_g, "base", bands, width))
         src.append(delta_banded)
-        touched = f_touched.result()
+
+    touched, _ = overlap(_touched, _write)
     touched_set = set(touched)
     bpat = re.compile(r"_(\d{5})(?:[._])")
     touched_files, untouched_base = [], []
@@ -4289,7 +4288,7 @@ def dedup_minhash_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("vector", "bucketing", "streaming"),
 )
 def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING twin of the ANN probe path (VERDICT r7 item 8b) — the
+    """STREAMING twin of the ANN probe path — the
     online-serving shape: query batches ARRIVE as a file stream (two
     5-query parquet files drained one per micro-batch) and each
     micro-batch probes the SAME persisted 16-bucket index
@@ -4310,16 +4309,16 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     file stream is the lakehouse serving pattern; swapping in a Kafka
     source changes one line of the reader."""
     import os
-    import time as _time
+    import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..session import PHASE_WALLS, ensure_conf, scratch_dir
-    from ..streaming.jobs import land
+    from ..session import ensure_conf, scratch_dir
+    from ..streaming.jobs import arrivals, drain, land
 
     ensure_conf(spark)
-    _t_scaffold = _time.time()
+    t0 = time.time()
     index = _ann_index_ensure(spark, sf_dir)
     idx = index.probe()
     qrows = sorted(
@@ -4359,30 +4358,8 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{out}/batch={batch_id}"
         )
 
-    _t_drain = _time.time()
-    stream = (
-        idx.sparkSession.readStream.schema("vec_id long, bucket int")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(landing)
-    )
-    q = (
-        stream.writeStream.foreachBatch(probe)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 120))
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming_ann_probe did not drain queries in {timeout_sec}s"
-        )
-    q.stop()
-    PHASE_WALLS["streaming_ann_probe"] = {
-        "scaffold_s": round(_t_drain - _t_scaffold, 3),
-        "drain_s": round(_time.time() - _t_drain, 3),
-    }
+    stream = arrivals(idx.sparkSession, "vec_id long, bucket int", landing)
+    drain(stream.writeStream.foreachBatch(probe), ckpt, "streaming_ann_probe", t0)
     return spark.read.option("recursiveFileLookup", "true").parquet(out)
 
 
@@ -4546,7 +4523,7 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape at 100 TB: each arriving batch pays exactly its own
     signature cost (shingle explode → 32 min-aggregates at doc grain,
-    the r7 one-pass shape) plus a signature-grain partial — the corpus
+    the one-pass shape) plus a signature-grain partial — the corpus
     is NEVER rescanned; the ledger merge shuffles signature-grain rows
     only (32 longs + two counters per DISTINCT signature). Swapping
     the file source for Kafka changes one reader line. Chained
@@ -4555,29 +4532,27 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one query — the foreachBatch ledger IS the idiomatic
     decomposition."""
     import os
-    import time as _time
+    import time
 
     from ..operators.dedup import minhash_signatures
-    from ..session import PHASE_WALLS, ensure_conf, scratch_dir
-    from ..streaming.jobs import stage_arrivals
+    from ..session import ensure_conf, scratch_dir
+    from ..streaming.jobs import arrivals, drain, stage_arrivals
 
     ensure_conf(spark)
-    _t_scaffold = _time.time()
+    t0 = time.time()
     docs_static = _docs(spark, sf_dir)
     schema = docs_static.schema
     root = scratch_dir("mh_stream")
     landing = os.path.join(root, "landing")
     ledger = os.path.join(root, "ledger")
     ckpt = os.path.join(root, "ckpt")
-    # three doc_id-sharded arrivals, so maxFilesPerTrigger=1 drains them
-    # as three ordered micro-batches
+    # three doc_id-sharded arrivals, drained as three ordered micro-batches
     stage_arrivals(
         docs_static.withColumn("shard", F.pmod(F.col("doc_id"), F.lit(3))),
         "shard",
         3,
         landing,
     )
-    _t_drain = _time.time()
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         partial = (
@@ -4590,29 +4565,8 @@ def streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         partial.write.mode("overwrite").parquet(f"{ledger}/batch={batch_id}")
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(landing)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 120))
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming_minhash_dedup did not drain shards in {timeout_sec}s"
-        )
-    q.stop()
-    PHASE_WALLS["streaming_minhash_dedup"] = {
-        "scaffold_s": round(_t_drain - _t_scaffold, 3),
-        "drain_s": round(_time.time() - _t_drain, 3),
-    }
+    stream = arrivals(spark, schema, landing)
+    drain(stream.writeStream.foreachBatch(fold), ckpt, "streaming_minhash_dedup", t0)
     led = spark.read.option("recursiveFileLookup", "true").parquet(ledger)
     return led.groupBy("minhash").agg(
         F.min("doc_id").alias("doc_id"), F.sum("cnt").alias("n_members")

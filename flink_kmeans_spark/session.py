@@ -23,6 +23,7 @@ run the stock ``pyspark.daemon``.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -68,6 +69,43 @@ def ensure_conf(spark: SparkSession) -> SparkSession:
             # will surface a clear error instead.
             pass
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict):
+    """Set ``confs`` on ``spark`` for the body, then put each key back:
+    restore its previous value, or unset it if it had none. Restored in
+    a ``finally``, so a body that raises leaves the session as found."""
+    saved = {}
+    try:
+        for k, v in confs.items():
+            saved[k] = spark.conf.get(k, None)
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def overlap(*thunks):
+    """Run each thunk on its own driver thread and return their results
+    in order, so independent job chains overlap instead of queueing.
+
+    Threads run under ``inheritable_thread_target`` (the classic-PySpark
+    form; Spark Connect needs the session-argument form), so their jobs
+    keep the caller's job group and local properties. A lazy checkpoint
+    that more than one thunk reads is computed by whichever task locks
+    each block first, while the other thread's task waits for it."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        return [f.result() for f in futures]
 
 
 def get_spark(app_name: str = "flink-kmeans-spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -119,9 +157,9 @@ _LIVE_SCRATCH: set = set()
 
 # Per-key phase walls for the streaming operators: the landing-dir build
 # is test scaffolding (writes that simulate file arrival) while the
-# drain is the operator under measurement. Each streaming key records
-# {"scaffold_s": ..., "drain_s": ...} here on every run so the two can
-# be measured separately.
+# drain is the operator under measurement. ``streaming.jobs.drain``
+# records {"scaffold_s": ..., "drain_s": ...} here for each streaming key
+# on every run so the two can be measured separately.
 PHASE_WALLS: dict = {}
 
 

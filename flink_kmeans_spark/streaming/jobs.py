@@ -14,12 +14,15 @@ input — the strongest available oracle for streaming semantics.
 
 from __future__ import annotations
 
+import os
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 
-import os
-
-from ..session import ensure_conf, scratch_dir
+from ..session import PHASE_WALLS, conf_scope, ensure_conf, scratch_dir
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -295,6 +298,53 @@ def stage_arrivals(df: DataFrame, col: str, n: int, dest: str) -> list[str]:
     return landed
 
 
+def arrivals(
+    spark: SparkSession, schema: StructType | str, landing: str
+) -> DataFrame:
+    """File-source stream over the landing dir ``landing``, one file per
+    micro-batch, oldest mtime first: the read side of :func:`land`'s
+    contract, so each arrival is its own ordered micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(landing)
+    )
+
+
+def drain(
+    writer: DataStreamWriter, ckpt: str, name: str, t0: float | None = None
+) -> None:
+    """Run ``writer`` as an availableNow query checkpointed at ``ckpt``
+    and wait until it has processed every file available at start.
+
+    The wait is bounded by $SPARK_GRAFT_STREAM_TIMEOUT seconds (default
+    120). A query still running then is stopped and ``TimeoutError``
+    names ``name``: returning after the stop would hand back a partial
+    result, a wrong answer rather than an error. The query is stopped
+    on every path out, so none is left running.
+
+    ``t0`` is the ``time.time()`` at which the caller began building
+    the landing dir; with it, ``PHASE_WALLS[name]`` records the
+    scaffold (landing build) and drain walls separately."""
+    timeout = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 120))
+    t_drain = time.time()
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    try:
+        # awaitTermination rejects a zero wait; 1 ms ends before any batch
+        if not q.awaitTermination(max(timeout, 0.001)):
+            raise TimeoutError(
+                f"stream {name!r} did not drain available data in {timeout}s"
+            )
+    finally:
+        q.stop()
+    if t0 is not None:
+        PHASE_WALLS[name] = {
+            "scaffold_s": round(t_drain - t0, 3),
+            "drain_s": round(time.time() - t_drain, 3),
+        }
+
+
 def streaming_late_data_stream(spark: SparkSession) -> DataFrame:
     """Watermark LATE-DATA semantics, made observable: a two-file
     landing directory processed one file per micro-batch
@@ -335,164 +385,80 @@ def streaming_late_data_stream(spark: SparkSession) -> DataFrame:
         pq.write_table(tbl, path)
         land(path, i)
 
-    stream = (
-        spark.readStream.schema("ts timestamp, event_id long")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(base)
-    )
     return (
-        stream.withWatermark("ts", "10 minutes")
+        arrivals(spark, "ts timestamp, event_id long", base)
+        .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "10 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.unix_micros("w.start").alias("w_start"), "n")
     )
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def rocksdb_state(spark: SparkSession):
-    """Pin the RocksDB state store provider for the duration of a
-    streaming query start (the conf is captured at .start(); restored
-    after the drain so the caller's session is left untouched).
-
-    WHY (r7 100× probe catch): the default HDFSBackedStateStoreProvider
-    keeps every partition's state map ON-HEAP. An availableNow drain of
-    a static table processes all files in one micro-batch, so the
-    watermark never gets a chance to evict — session state for the
-    ENTIRE input materializes at once, which OOMed the single-JVM 8 g
-    driver at 100× data (streaming_session_window, ~100 M events).
-    RocksDB keeps state off-heap/on-disk per partition — the standard
-    production choice for large-state Structured Streaming — and the
-    same drain completes in bounded heap. Results are bit-identical;
-    only the state backend changes."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
+# Pinned for every run_available_now drain. The default state store keeps
+# each partition's state map on-heap, and an availableNow drain of a static
+# table builds the whole input's state in one micro-batch, which OOMed an
+# 8 g driver at 100x data; RocksDB keeps it off-heap, with identical results.
+_ROCKSDB_STATE = {
+    "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, rocks)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    ),
+}
 
-
-@contextmanager
-def _no_data_batches_disabled(spark: SparkSession):
-    """Pin ``noDataMicroBatches.enabled=false`` for one query start
-    (captured at .start(); restored after the drain).
-
-    r12 (VERDICT r11 item 6): the availableNow drain of a static table
-    runs batch 0 (all data) plus one ZERO-ROW no-data batch whose only
-    job is advancing the watermark — profiled at 0.9–1.4 s per drain
-    (addBatch over empty input still opens/commits every state-store
-    partition). For queries whose OUTPUT cannot depend on that batch —
-    eager-emitting append operators (dedup, inner joins, stateless
-    maps), complete-mode aggregations (state never evicted, each
-    trigger re-emits everything), and the update-mode counter (no
-    input ⇒ no changed groups, NoTimeout ⇒ no timer fires) — skipping
-    it is results-identical and removes a whole micro-batch of
-    state-store round-trips. It is NOT safe for append-mode windowed
-    aggregations (streaming_late_data), where the no-data batch is what
-    flushes finalized windows — that key keeps the default. This is a
-    semantics-scoped batch-count reduction, valid at any scale, not a
-    local-core-count tune."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+# Pinned only where the output cannot depend on the trailing zero-row
+# batch, whose one job is to advance the watermark: eager-emitting append
+# operators, complete-mode aggregations and the update-mode counter.
+# Skipping it saves a micro-batch of state-store round trips (0.9-1.4 s
+# per drain). Append-mode windowed aggregations keep it: that batch is
+# what flushes their finalized windows.
+_NO_DATA_BATCH_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 def run_available_now(
     df: DataFrame,
     name: str,
     output_mode: str = "complete",
-    timeout_sec: int = 120,
     skip_no_data_batch: bool = False,
 ) -> DataFrame:
-    """Drain the stream with the availableNow trigger and return the
-    result as a DataFrame (test/driver harness helper). The checkpoint
-    and the staged result live in one scratch dir. State runs on
-    RocksDB (see rocksdb_state).
+    """Drain the stream (see :func:`drain`) and return the result as a
+    DataFrame (test/driver harness helper). The checkpoint and the
+    staged result live in one scratch dir. State runs on RocksDB, and
+    ``skip_no_data_batch`` drops the trailing no-data batch (see the
+    conf dicts above).
 
-    The result is staged to PARQUET from inside ``foreachBatch`` — an
-    executor-side distributed write. The previous memory-sink harness
-    collected the whole drained aggregate into driver heap AND re-served
-    it as a driver-local parallelized collection, which OOMed the 8 g
-    single-JVM driver the first time a drain outgrew it (r7 100× probe:
-    streaming_session_window over ~100 M events — the harness, not the
-    plan, was the bottleneck). foreachBatch honours the query's output
-    mode, so complete mode still replaces the staged result per trigger
-    and the last trigger holds the full aggregate — results are
-    bit-identical to the memory sink at every scale that fit it.
-
-    ``timeout_sec`` can be overridden with $SPARK_GRAFT_STREAM_TIMEOUT
-    (the 100× probe needs more than two minutes of drain)."""
-    timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", timeout_sec))
+    The result is staged to parquet from inside ``foreachBatch``, an
+    executor-side distributed write, so the drained result never has to
+    fit in driver heap. foreachBatch honours the query's output mode, so
+    in complete mode the last trigger's overwrite holds the full
+    aggregate."""
     root = scratch_dir(f"stream_{name}")
     ckpt, out = f"{root}/ckpt", f"{root}/result"
     spark = df.sparkSession
 
     def stage(batch_df: DataFrame, batch_id: int) -> None:
-        # complete mode: each trigger carries the FULL updated result —
-        # overwrite so the last trigger wins (identical to memory-sink
-        # semantics). append/update modes stage their increments into a
-        # PER-BATCH subdir with overwrite, so a retried micro-batch
-        # (foreachBatch is at-least-once) REPLACES its own batch=N dir
-        # instead of double-appending rows (ADVICE r7).
+        # complete mode: each trigger carries the full updated result, so
+        # the last overwrite wins. append/update modes stage increments
+        # into a per-batch dir with overwrite, so a retried micro-batch
+        # (foreachBatch is at-least-once) replaces its own batch=N dir
+        # instead of appending its rows twice.
         if output_mode == "complete":
             batch_df.write.mode("overwrite").parquet(out)
         else:
             batch_df.write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
 
-    from contextlib import nullcontext
-
-    with rocksdb_state(spark), (
-        _no_data_batches_disabled(spark) if skip_no_data_batch else nullcontext()
-    ):
-        q = (
-            df.writeStream.foreachBatch(stage)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # awaitTermination returns False on timeout — stopping then would
-        # truncate the availableNow drain and silently return a PARTIAL
-        # result (a wrong answer, not an error). Fail loudly instead.
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"stream {name!r} did not drain available data in {timeout_sec}s"
-            )
-        q.stop()
+    confs = dict(_ROCKSDB_STATE)
+    if skip_no_data_batch:
+        confs.update(_NO_DATA_BATCH_OFF)
+    with conf_scope(spark, confs):
+        drain(df.writeStream.foreachBatch(stage).outputMode(output_mode), ckpt, name)
     have_files = os.path.isdir(out) and any(
         f.endswith(".parquet")
         for _, _, names in os.walk(out)
         for f in names
     )
     if not have_files:
-        # zero triggers fired (empty source): preserve the old memory-sink
-        # behavior of an empty frame with the stream's schema
+        # zero triggers fired (empty source): an empty frame with the
+        # stream's schema
         return spark.createDataFrame([], df.schema)
     if output_mode == "complete":
         return spark.read.parquet(out)
@@ -501,9 +467,7 @@ def run_available_now(
     return spark.read.option("recursiveFileLookup", "true").parquet(out)
 
 
-def run_foreach_batch_upsert(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 120
-) -> DataFrame:
+def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``foreachBatch`` sink — the production pattern for targets with
     no native streaming writer (JDBC upserts, MERGE INTO a lakehouse
     table): each micro-batch is handed to arbitrary BATCH logic with a
@@ -535,16 +499,7 @@ def run_foreach_batch_upsert(
             .parquet(stage)
         )
 
-    q = (
-        ev.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(f"foreachBatch stream did not drain in {timeout_sec}s")
-    q.stop()
+    drain(ev.writeStream.foreachBatch(apply_batch), ckpt, "foreach_batch_upsert")
 
     staged = spark.read.parquet(stage)
     return staged.groupBy("user_id").agg(
@@ -559,17 +514,14 @@ def run_foreach_batch_upsert(
     )
 
 
-def run_checkpoint_resume(
-    spark: SparkSession, sf_dir: str, timeout_sec: int = 120
-) -> DataFrame:
+def run_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once incremental ingestion with CHECKPOINT RESUME: the
     landing directory receives files in two arrivals; each arrival is
-    drained by a SEPARATE availableNow query sharing one checkpoint
-    and one parquet sink. The second run must resume from the
-    checkpoint's file log — reprocessing nothing, missing nothing —
-    so the sink holds every event exactly once (the crash/restart
-    guarantee a 100 TB ingestion pipeline leans on; identity oracle
-    over the source proves it)."""
+    drained by a SEPARATE query sharing one checkpoint and one parquet
+    sink. The second run must resume from the checkpoint's file log —
+    reprocessing nothing, missing nothing — so the sink holds every
+    event exactly once (the crash/restart guarantee a 100 TB ingestion
+    pipeline leans on; identity oracle over the source proves it)."""
     from ..sources.tables import _normalize_event_ts
 
     root = scratch_dir("ckpt_resume")
@@ -577,12 +529,11 @@ def run_checkpoint_resume(
     os.makedirs(landing)
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    schema = ev.schema
     # two disjoint, exhaustive arrivals built in one corpus pass; each
     # waits in a stage dir until the drain before it has completed, so
     # drain 0 cannot see arrival 1 — the os-level move is how a real
     # landing directory receives files
-    arrivals = stage_arrivals(
+    staged = stage_arrivals(
         ev.withColumn(
             "arrival",
             F.when(F.col("event_id") % 2 == 0, F.lit(0)).otherwise(F.lit(1)),
@@ -591,25 +542,17 @@ def run_checkpoint_resume(
         2,
         f"{root}/stage",
     )
-    for path in arrivals:
-        os.replace(path, os.path.join(landing, os.path.basename(path)))
-        stream = _normalize_event_ts(
-            spark.readStream.schema(schema).parquet(landing)
-        )
-        q = (
+    for path in staged:
+        name = os.path.basename(path)
+        os.replace(path, os.path.join(landing, name))
+        stream = _normalize_event_ts(arrivals(spark, ev.schema, landing))
+        drain(
             stream.writeStream.format("parquet")
             .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            ckpt,
+            name,
         )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"{os.path.basename(path)} did not drain in {timeout_sec}s"
-            )
-        q.stop()
     return spark.read.parquet(sink).select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("value")
     )

@@ -302,12 +302,10 @@ def test_tpch_q21_aggregate_rewrite_shape(spark, sf_dir):
 
 
 def test_bloom_runtime_filter_injected(spark, sf_dir):
-    from flink_kmeans_spark.plans.analytics import (
-        _bloom_filter_confs,
-        _bloom_pruned_agg,
-    )
+    from flink_kmeans_spark.plans.analytics import _BLOOM_CONFS, _bloom_pruned_agg
+    from flink_kmeans_spark.session import conf_scope
 
-    with _bloom_filter_confs(spark):
+    with conf_scope(spark, _BLOOM_CONFS):
         p = plan_of(_bloom_pruned_agg(spark, sf_dir))
     # the selective orders predicate ships to the lineitem side as a
     # runtime bloom filter probed BEFORE the shuffle
@@ -739,6 +737,33 @@ def test_bucketed_tables_have_one_owner():
         f"{path.relative_to(pkg)}:{n}"
         for path in sorted(pkg.rglob("*.py"))
         if path != pkg / "operators" / "bucketed.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if owned.search(line)
+    ]
+    assert offenders == []
+
+
+def test_streaming_drains_and_conf_scopes_have_one_owner():
+    """Only streaming/jobs.py may start, wait on or time a drain, or
+    build the ordered landing reader; only session.py may unset a conf.
+    Every other module goes through arrivals/drain and conf_scope."""
+    import pathlib
+
+    import flink_kmeans_spark
+
+    pkg = pathlib.Path(flink_kmeans_spark.__file__).parent
+    owners = {
+        pkg / "streaming" / "jobs.py": re.compile(
+            r"awaitTermination\(|availableNow|maxFilesPerTrigger"
+            r"|SPARK_GRAFT_STREAM_TIMEOUT|PHASE_WALLS\["
+        ),
+        pkg / "session.py": re.compile(r"conf\.unset\("),
+    }
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}"
+        for owner, owned in owners.items()
+        for path in sorted(pkg.rglob("*.py"))
+        if path != owner
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if owned.search(line)
     ]

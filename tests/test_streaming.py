@@ -245,3 +245,33 @@ def test_streaming_checkpoint_resume_exactly_once(spark, sf_dir):
     )
     log = os.path.join(root, "sink", "_spark_metadata")
     assert sorted(f for f in os.listdir(log) if f.isdigit()) == ["0", "1"]
+
+
+@pytest.mark.parametrize("job", ["run_foreach_batch_upsert", "run_checkpoint_resume"])
+def test_drain_timeout_raises_and_stops_query(spark, sf_dir, monkeypatch, job):
+    """$SPARK_GRAFT_STREAM_TIMEOUT bounds every drain: at 0 the drain
+    cannot finish, so it raises TimeoutError and leaves no query running."""
+    from flink_kmeans_spark.streaming import jobs
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TIMEOUT", "0")
+    with pytest.raises(TimeoutError):
+        getattr(jobs, job)(spark, sf_dir)
+    assert spark.streams.active == []
+
+
+def test_conf_scope_restores_confs_when_body_raises(spark):
+    """A preset key gets its value back and an unset key is unset again,
+    even when the body raises."""
+    from flink_kmeans_spark.session import conf_scope
+
+    preset, unset = "spark.graft.test.preset", "spark.graft.test.unset"
+    spark.conf.set(preset, "before")
+    spark.conf.unset(unset)
+    with pytest.raises(RuntimeError):
+        with conf_scope(spark, {preset: "inside", unset: "inside"}):
+            assert spark.conf.get(preset) == "inside"
+            assert spark.conf.get(unset) == "inside"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(preset) == "before"
+    assert spark.conf.get(unset, None) is None
+    spark.conf.unset(preset)
