@@ -44,14 +44,6 @@ def stopword_ratio(text: Column) -> Column:
     return hits / F.size(toks)
 
 
-def avg_token_len(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda a, x: a + x
-    )
-    return total / F.size(toks)
-
-
 def quality_score(text: Column) -> Column:
     """Composite document-quality heuristic in [0, 1]: length band +
     lexical diversity + stopword presence (the standard cheap pretrain

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import shutil
 from typing import Callable
 from urllib.parse import unquote, urlparse
@@ -62,6 +63,10 @@ def _data_fingerprint(spark: SparkSession, path: str) -> list:
         st = os.stat(local)
         return [f"{st.st_size}:{st.st_mtime_ns}"]
     return []
+
+
+# a bucketed FileScan's metadata: "SelectedBucketsCount: 3 out of 16"
+_SELECTED_BUCKETS = re.compile(r"SelectedBucketsCount: (\d+) out of (\d+)")
 
 
 def _md8(s: str) -> str:
@@ -213,12 +218,22 @@ class BucketedIndex:
         return s2.table(self.name)
 
     def pruned(self, frame: DataFrame, who: str) -> DataFrame:
-        """Return ``frame`` if its scan of this table is bucket-pruned;
-        raise otherwise, naming ``who``."""
+        """Return ``frame`` if every scan of this table in its physical
+        plan reads fewer buckets than the table has; raise otherwise,
+        naming ``who``. An unpruned bucketed scan still prints
+        ``SelectedBucketsCount`` ("16 out of 16"), so the counts are
+        compared, not just found."""
         plan = frame._jdf.queryExecution().executedPlan().toString()
-        if "SelectedBucketsCount" not in plan:
+        table = f".{self.name}[".lower()
+        scans = [
+            ln for ln in plan.splitlines()
+            if "FileScan" in ln and table in ln.lower()
+        ]
+        counts = [_SELECTED_BUCKETS.search(ln) for ln in scans]
+        if not scans or not all(m and int(m[1]) < int(m[2]) for m in counts):
+            selected = [m[0] if m else "not bucketed" for m in counts]
             raise RuntimeError(
                 f"{who}: bucket pruning did not engage on {self.name} "
-                "(no SelectedBucketsCount in the probe scan plan)"
+                f"(scans: {selected or 'none'})"
             )
         return frame

@@ -4,7 +4,6 @@ of each Arrow-batched extension point, all numpy-vectorized —
 - scalar ``pandas_udf``          (row-wise compute, Arrow transfer)
 - grouped-agg ``pandas_udf``     (UDAF shape)
 - ``applyInPandas``              (grouped map / UDTF-ish)
-- ``mapInPandas``                (partition-stream map)
 
 These are the SLOW PATH by policy: everything expressible with built-in
 functions elsewhere in this repo uses them; the UDFs exist for kernels
@@ -13,8 +12,6 @@ one's semantics are pinned by an equivalent-built-in test.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -64,21 +61,6 @@ def label_centroids_applyinpandas(points: DataFrame) -> DataFrame:
         )
 
     return points.groupBy("label").applyInPandas(per_group, schema)
-
-
-def batch_stats_mapinpandas(points: DataFrame) -> DataFrame:
-    """mapInPandas: per-Arrow-batch statistics (the partition-stream
-    shape used by the K-Means hot loop and the media decoder)."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            yield pd.DataFrame(
-                {"batch_rows": [len(pdf)], "batch_mean_norm": [float(np.sqrt((m * m).sum(axis=1)).mean())]}
-            )
-
-    return points.mapInPandas(gen, "batch_rows long, batch_mean_norm double")
 
 
 def deflate_len_udf():

@@ -1757,8 +1757,9 @@ def sim_ann_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries' cells (bounded: ≤ |batch| ints), filters the index with a
     literal ``bucket IN (...)`` — which Spark turns into BUCKET
     PRUNING, reading only the matching bucket files (the callable
-    asserts the scan is pruned; a regression to a full scan raises) —
-    and broadcast-joins the tiny query set for exact in-cell cosine
+    asserts every scan is pruned, the query side's too; a regression
+    to a full scan raises) — and broadcast-joins the tiny query set,
+    read from the same pruned candidates, for exact in-cell cosine
     top-3. The probes run on ``BucketedIndex.probe``'s cloned session,
     which keeps the bucketed scan (and with it the pruning) for a
     filter-only probe.
@@ -1778,14 +1779,9 @@ def sim_ann_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for batch, rows in (("A", qrows[:5]), ("B", qrows[5:])):
-        cells = sorted({r["bucket"] for r in rows})
-        ids = [r["vec_id"] for r in rows]
-        cand = index.pruned(
-            idx.filter(F.col("bucket").isin(cells)), "sim_ann_repartitioned"
-        )
-        top = _ann_cell_topk(idx, cand, ids, k=3).select(
-            F.lit(batch).alias("batch"), "q_id", "n_id", "cosine", "rk"
-        )
+        top = _ann_cell_topk(
+            index, idx, rows, f"sim_ann_repartitioned batch {batch}"
+        ).selectExpr(f"'{batch}' AS batch", "q_id", "n_id", "cosine", "rk")
         out = top if out is None else out.unionByName(top)
     return out
 
@@ -1824,46 +1820,48 @@ def _ann_index_ensure(spark: SparkSession, sf_dir: str) -> BucketedIndex:
     ).ensure(lambda: _ann_indexed(_emb(spark, sf_dir)))
 
 
-def _ann_cell_topk(idx: DataFrame, cand: DataFrame, ids: list, k: int = 3) -> DataFrame:
-    """Exact in-cell cosine top-k of ``cand`` rows for the query
-    vec_ids ``ids`` (queries broadcast off the index itself). Shared by
-    sim_ann_repartitioned's batch probes and streaming_ann_probe's
-    per-micro-batch probe."""
-    from pyspark.sql.window import Window
+def _ann_cell_topk(
+    index: BucketedIndex, idx: DataFrame, rows: list, who: str, k: int = 3
+) -> DataFrame:
+    """Exact in-cell cosine top-k for the query ``rows`` (each with
+    ``vec_id`` and ``bucket``) over the index rows in their cells.
+    Shared by sim_ann_repartitioned's batch probes, sim_ann_incremental
+    and streaming_ann_probe's per-micro-batch probe.
 
-    q = idx.filter(F.col("vec_id").isin(ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("bucket").alias("q_bucket"),
-        F.col("embedding").cast("array<double>").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
+    Both join sides read the literal ``bucket IN (<cells>)`` candidates
+    of ``idx`` (the queries are index rows, so they are among them),
+    and ``index.pruned`` checks that every scan of the returned frame
+    is bucket-pruned, naming ``who`` if one is not. Each step is SQL
+    text, parsed once on the JVM side: built from Column objects, the
+    same plan costs a Py4J round trip per expression node."""
+    cells = ", ".join(str(c) for c in sorted({r["bucket"] for r in rows}))
+    ids = ", ".join(str(r["vec_id"]) for r in rows)
+    cand = idx.where(f"bucket IN ({cells})")
+    q = cand.where(f"vec_id IN ({ids})").selectExpr(
+        "vec_id AS q_id",
+        "bucket AS q_bucket",
+        "CAST(embedding AS array<double>) AS q_vec",
+        "nrm AS q_nrm",
     )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("q_vec"),
-            F.col("embedding").cast("array<double>"),
-            lambda a, b: a * b,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        cand.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("q_bucket"))
-            & (F.col("vec_id") != F.col("q_id")),
-        )
-        .select(
+    top = (
+        cand.join(F.broadcast(q), F.expr("bucket = q_bucket AND vec_id <> q_id"))
+        .selectExpr(
             "q_id",
-            F.col("vec_id").alias("n_id"),
-            (dot / (F.col("q_nrm") * F.col("nrm"))).alias("cosine"),
+            "vec_id AS n_id",
+            "aggregate(zip_with(q_vec, CAST(embedding AS array<double>),"
+            " (a, b) -> a * b), 0D, (acc, x) -> acc + x)"
+            " / (q_nrm * nrm) AS cosine",
         )
+        .selectExpr(
+            "q_id",
+            "n_id",
+            "cosine",
+            "row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS rk",
+        )
+        .where(f"rk <= {k}")
+        .selectExpr("q_id", "n_id", "cosine", "CAST(rk AS int) AS rk")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), "n_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", F.col("rk").cast("int").alias("rk"))
-    )
+    return index.pruned(top, who)
 
 
 @register(
@@ -3563,15 +3561,10 @@ def sim_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     index.append(indexed.filter(F.col("vec_id") % 10 == 0))
     idx = index.probe()
     qrows = idx.orderBy("vec_id").limit(10).select("vec_id", "bucket").collect()
-    cells = sorted({r["bucket"] for r in qrows})
-    ids = [r["vec_id"] for r in qrows]
-    cand = index.pruned(
-        idx.filter(F.col("bucket").isin(cells)),
-        "sim_ann_incremental after the delta append",
-    )
-    out = _ann_cell_topk(idx, cand, ids, k=3).withColumn(
-        "phase",
-        F.when(F.col("n_id") % 10 == 0, F.lit("delta")).otherwise(F.lit("base")),
+    out = _ann_cell_topk(
+        index, idx, qrows, "sim_ann_incremental after the delta append"
+    ).selectExpr(
+        "*", "CASE WHEN n_id % 10 = 0 THEN 'delta' ELSE 'base' END AS phase"
     )
     # bounded result (≤ 3·|queries| rows): materialize it so the handle
     # does not depend on the per-call table's files
@@ -4294,12 +4287,12 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch probes the SAME persisted 16-bucket index
     sim_ann_repartitioned built, inside ``foreachBatch``: collect the
     batch's queries (bounded: ≤ 5 rows), filter the index with a
-    literal ``bucket IN (...)`` — BUCKET PRUNING is asserted per batch
-    (``BucketedIndex.pruned``; a regression to a full scan raises
-    mid-stream) — broadcast the queries for
-    exact in-cell cosine top-3, and stage the batch's results to a
-    per-batch_id parquet dir (idempotent under foreachBatch's
-    at-least-once retries). The DuckDB oracle is the BATCH answer over
+    literal ``bucket IN (...)`` — BUCKET PRUNING of every scan is
+    asserted per batch (``BucketedIndex.pruned``; a regression to a
+    full scan raises mid-stream) — broadcast the queries, read from
+    the same pruned candidates, for exact in-cell cosine top-3, and
+    stage the batch's results to a per-batch_id parquet dir
+    (idempotent under foreachBatch's at-least-once retries). The DuckDB oracle is the BATCH answer over
     the full corpus, so a hash match proves stream-serving ≡ batch.
 
     Scale shape at 100 TB: the index is paid once at ingest (shared
@@ -4348,15 +4341,9 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = batch_df.collect()  # ≤ 5 queries per arriving batch
         if not rows:
             return
-        cells = sorted({r["bucket"] for r in rows})
-        ids = [r["vec_id"] for r in rows]
-        cand = index.pruned(
-            idx.filter(F.col("bucket").isin(cells)),
-            f"streaming_ann_probe micro-batch {batch_id}",
-        )
-        _ann_cell_topk(idx, cand, ids, k=3).write.mode("overwrite").parquet(
-            f"{out}/batch={batch_id}"
-        )
+        _ann_cell_topk(
+            index, idx, rows, f"streaming_ann_probe micro-batch {batch_id}"
+        ).write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
 
     stream = arrivals(idx.sparkSession, "vec_id long, bucket int", landing)
     drain(stream.writeStream.foreachBatch(probe), ckpt, "streaming_ann_probe", t0)

@@ -17,7 +17,10 @@ confs every operator relies on:
 SparkContext starts: among them the Python worker daemon
 (:mod:`flink_kmeans_spark.worker_daemon`). ``ensure_conf`` cannot apply
 those to the driver's already-running session, so its Python workers
-run the stock ``pyspark.daemon``.
+run the stock ``pyspark.daemon``. It likewise turns off PySpark's
+per-Column call-site capture, which ``ensure_conf`` leaves as the
+driver's session has it: PySpark reads that flag once per process, and
+it belongs to the caller.
 """
 
 from __future__ import annotations
@@ -136,6 +139,11 @@ def get_spark(app_name: str = "flink-kmeans-spark", shuffle_partitions: int | No
         # dir on the workers' path lets the daemon import from any cwd
         .config("spark.python.daemon.module", "flink_kmeans_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
+        # no Python call-site capture per Column op: with it on, each
+        # F.col / Column method walks the stack and makes ~5 extra Py4J
+        # round trips (and imports IPython once). PySpark reads this flag
+        # once per process, at the first Column op under an active session
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

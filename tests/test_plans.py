@@ -743,6 +743,35 @@ def test_bucketed_tables_have_one_owner():
     assert offenders == []
 
 
+def test_bucket_pruning_guard_compares_selected_buckets(spark):
+    """BucketedIndex.pruned passes a probe only if every scan of the
+    table reads fewer buckets than it has: an unfiltered probe and a
+    filter on a non-key column still print SelectedBucketsCount
+    ("16 out of 16") and must raise, as must a join whose second scan
+    is unpruned."""
+    from pyspark.sql import functions as F
+
+    from flink_kmeans_spark.operators.bucketed import BucketedIndex
+
+    index = BucketedIndex.per_call(spark, "test_prune_guard", 16, "bucket")
+    index.overwrite(
+        spark.range(64).selectExpr("id AS vec_id", "CAST(id % 16 AS int) AS bucket")
+    )
+    idx = index.probe()
+    cand = idx.where("bucket IN (1, 2)")
+    assert index.pruned(cand, "cells") is cand
+    unpruned = {
+        "unfiltered": idx,
+        "vec_id only": idx.where("vec_id < 5"),
+        "one side of a join": cand.join(
+            idx.selectExpr("vec_id AS v"), F.expr("vec_id = v")
+        ),
+    }
+    for who, frame in unpruned.items():
+        with pytest.raises(RuntimeError, match=f"{who}: bucket pruning did not engage"):
+            index.pruned(frame, who)
+
+
 def test_streaming_drains_and_conf_scopes_have_one_owner():
     """Only streaming/jobs.py may start, wait on or time a drain, or
     build the ordered landing reader; only session.py may unset a conf.

@@ -1,6 +1,8 @@
-"""The Python worker daemon of get_spark sessions: workers carry the
-``zipimporter.invalidate_caches`` patch, and the patch keeps the stdlib
-semantics (an unchanged archive is not re-read, a changed one is)."""
+"""The Python boundary of get_spark sessions: workers run from the
+package's daemon and carry the ``zipimporter.invalidate_caches`` patch,
+the patch keeps the stdlib semantics (an unchanged archive is not
+re-read, a changed one is), and the driver builds plans without
+per-Column call-site capture."""
 
 import os
 import subprocess
@@ -62,3 +64,33 @@ def test_patch_rereads_only_a_changed_archive(tmp_path):
         timeout=60,
     )
     assert "DAEMON_PATCH_OK" in r.stdout, r.stderr[-2000:]
+
+
+CAPTURE_SCRIPT = """
+import sys
+from pyspark.errors.utils import is_debugging_enabled
+from pyspark.sql import functions as F
+from flink_kmeans_spark.session import get_spark
+
+spark = get_spark("capture-off")
+df = spark.range(3).select((F.col("id") + 1).alias("b")).where(F.col("b") > 1)
+assert df.count() == 2
+assert is_debugging_enabled() is False
+assert "IPython" not in sys.modules, "call-site capture imported IPython"
+spark.stop()
+print("CAPTURE_OFF_OK", flush=True)
+"""
+
+
+def test_get_spark_turns_off_call_site_capture(tmp_path):
+    # a subprocess: PySpark caches the flag for the whole process at the
+    # first Column op, so it must be read fresh after get_spark
+    r = subprocess.run(
+        [sys.executable, "-c", CAPTURE_SCRIPT],
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": REPO_ROOT},
+        capture_output=True,
+        text=True,
+        timeout=180,
+    )
+    assert "CAPTURE_OFF_OK" in r.stdout, r.stderr[-2000:]
