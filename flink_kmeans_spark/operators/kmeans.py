@@ -45,6 +45,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..boundary import install
 from ..functions.vectors import sqdist
 
 Centroids = list[tuple[int, list[float]]]
@@ -196,6 +197,7 @@ def assign_arrow(
     ids = np.array([cid for cid, _ in cents], dtype=np.int64)
 
     def gen(batches):
+        install()
         import pyarrow as pa
 
         for batch in batches:
@@ -240,6 +242,7 @@ def _partial_sums_df(points: DataFrame, centroids, vec_col: str = "embedding"):
     names = ["cid", "n"] + [f"s{i}" for i in range(d)]
 
     def part(batches):
+        install()
         import pyarrow as pa
 
         for batch in batches:

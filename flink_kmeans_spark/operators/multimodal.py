@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..boundary import install
+
 # binary payload + typed metadata: the at-rest layout for a media table
 MEDIA_SCHEMA = (
     "doc_id long, media_type string, payload binary, "
@@ -89,6 +91,7 @@ def to_image_table(
     cc = content_col or id_col
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:
@@ -146,6 +149,7 @@ def decode_image_media(media: DataFrame) -> DataFrame:
     dec, probe = decode_png, probe_image  # closures → ship by value
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:
@@ -211,6 +215,7 @@ def decode_media(media: DataFrame, real_decode: bool = False) -> DataFrame:
         return decode_image_media(media)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd  # worker-side import; no repo imports here
 
         def stub_decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -248,6 +253,7 @@ def frame_sample(media: DataFrame, frames_per_doc: int = 3) -> DataFrame:
     changing mapInPandas, the video-pipeline pattern). Frames are stub
     byte-slices; offsets/indices are real plumbing."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -282,6 +288,7 @@ def resize_image_media(media: DataFrame, out_w: int = 3, out_h: int = 2) -> Data
     W2, H2 = out_w, out_h
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:
@@ -341,6 +348,7 @@ def dhash_image_media(media: DataFrame, hash_w: int = 8, hash_h: int = 8) -> Dat
     HW, HH = hash_w, hash_h
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:
@@ -387,6 +395,7 @@ def to_audio_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     enc = encode_wav_pcm16  # closure qualname → ships by value
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:
@@ -422,6 +431,7 @@ def decode_audio_media(media: DataFrame) -> DataFrame:
     dec = decode_wav  # closure qualname → ships by value
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:
@@ -476,6 +486,7 @@ def vad_audio_media(
     dec = decode_wav  # closure qualname → ships by value
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:
@@ -537,6 +548,7 @@ def to_video_table(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     enc = encode_png_gray
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:
@@ -579,6 +591,7 @@ def framesample_video_media(media: DataFrame, stride: int = 2) -> DataFrame:
     dec = decode_png
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:
@@ -630,6 +643,7 @@ def spectrogram_audio_media(media: DataFrame, bins=(1, 2, 3)) -> DataFrame:
     ks = tuple(int(k) for k in bins)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..boundary import install
 from ..functions.vectors import cosine_sim, dot, l2norm
 from ..session import overlap
 
@@ -285,6 +286,7 @@ def pq_topk(
     m_, nc_, sub_ = n_subspaces, n_codes, sub
 
     def encode(batches):
+        install()
         import numpy as np
         import pandas as pd
 
@@ -320,6 +322,7 @@ def pq_topk(
     QV = _unit(np.array([r[1] for r in q_rows], dtype=np.float64)).tolist()
 
     def score(batches):
+        install()
         import numpy as np
         import pandas as pd
 
@@ -442,6 +445,7 @@ def embedding_near_dups(
     )
 
     def score(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame):
+        install()
         if not len(lpdf) or not len(rpdf):
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
                 {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
@@ -580,6 +584,7 @@ def knn_graph(
     )
 
     def partial_topk(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame):
+        install()
         empty = pd.DataFrame({"q_id": [], "n_id": [], "cosine": []}).astype(
             {"q_id": "int64", "n_id": "int64", "cosine": "float64"}
         )
@@ -739,6 +744,7 @@ def hnsw_lite_topk(
 
         @pandas_udf("array<long>")
         def band_sigs(vecs):
+            install()
             import numpy as np
             import pandas as pd
 

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..boundary import install
+
 
 # UDF objects are built lazily: @pandas_udf parses its DDL type against
 # the ACTIVE session, and queries() must be constructible session-free.
@@ -28,6 +30,7 @@ def vector_norm_udf():
     @pandas_udf("double")
     def _norm(emb: pd.Series) -> pd.Series:
         """Scalar pandas UDF: L2 norm per row, one numpy call per batch."""
+        install()
         m = np.array(emb.tolist(), dtype=np.float64)
         return pd.Series(np.sqrt((m * m).sum(axis=1)))
 
@@ -38,6 +41,7 @@ def mean_vector_udaf():
     @pandas_udf("array<double>")
     def _mean(emb: pd.Series) -> list:
         """Grouped-agg pandas UDF (UDAF): element-wise mean vector."""
+        install()
         m = np.array(emb.tolist(), dtype=np.float64)
         return m.mean(axis=0).tolist()
 
@@ -50,6 +54,7 @@ def label_centroids_applyinpandas(points: DataFrame) -> DataFrame:
     schema = "label int, n long, centroid_norm double"
 
     def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        install()
         m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
         c = m.mean(axis=0)
         return pd.DataFrame(
@@ -68,6 +73,7 @@ def deflate_len_udf():
     def _zlen(s: pd.Series) -> pd.Series:
         """Scalar pandas UDF: deflate(level 6) byte length per row.
         zlib is C-speed and releases the GIL; Arrow transfer dominates."""
+        install()
         import zlib
 
         # NULL text must not fail the whole Arrow batch (ADVICE r6):

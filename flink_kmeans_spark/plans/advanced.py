@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..boundary import install
 from ..session import scratch_dir
 from ..sources import load_table
 from .registry import register
@@ -1073,6 +1074,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
 
         def read(self, partition):
+            install()
             for i in range(partition.start, partition.end):
                 yield (i, i * i)
 
@@ -2319,6 +2321,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(fdir, exist_ok=True)
 
     def _write_blobs(rows):  # executor-side: payload bytes never cross the driver
+        install()
         import os as _os
 
         _os.makedirs(fdir, exist_ok=True)
@@ -2358,10 +2361,12 @@ def udf_arrow_optimized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     @udf(returnType="string", useArrow=True)
     def py_upper(s: str) -> str:
+        install()
         return s.upper() if s is not None else None
 
     @udf(returnType="double", useArrow=True)
     def py_quarter(x: float) -> float:
+        install()
         # x*0.25 is an exact power-of-two scale — bit-identical across
         # engines; Python round() is half-even vs DuckDB half-up, so no
         # in-UDF rounding (repo float discipline)
@@ -3910,6 +3915,7 @@ def udf_arrow_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
 
     def per_flag(t):
+        install()
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -4572,6 +4578,7 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             return {"i": 0}
 
         def read(self, start):
+            install()
             s = start["i"]
             if s >= n_total:
                 return iter([]), {"i": s}

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..boundary import install
 from ..operators.bucketed import BucketedIndex
 from ..sources import load_table
 from .registry import register
@@ -2968,6 +2969,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, bcoef = _HOLT_A, _HOLT_B
 
     def holt(pdf):
+        install()
         import pandas as pd
 
         pdf = pdf.sort_values("w")

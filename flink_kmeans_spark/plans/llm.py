@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..boundary import install
 from ..functions import text as TX
 from ..operators import dedup as DD
 from ..operators import multimodal as MM
@@ -1048,6 +1049,7 @@ def multimodal_probe_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc, probe = encode_png_gray, probe_image  # ship by value
 
     def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import struct
 
         import pandas as pd
@@ -1078,6 +1080,7 @@ def multimodal_probe_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
 
     def sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install()
         import pandas as pd
 
         for pdf in batches:
@@ -1152,6 +1155,7 @@ def udtf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="doc_id bigint, pos int, word string")
     class SplitFirstWords:
         def eval(self, doc_id, text: str):
+            install()
             for i, w in enumerate(text.split(" ")[:5]):
                 yield doc_id, i, w
 
@@ -1773,10 +1777,7 @@ def sim_ann_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-bounded random-hyperplane LSH (sim_lsh_topk)."""
     index = _ann_index_ensure(spark, sf_dir)
     idx = index.probe()
-    qrows = sorted(
-        idx.orderBy("vec_id").limit(10).select("vec_id", "bucket").collect(),
-        key=lambda r: r["vec_id"],
-    )
+    qrows = _ann_queries(spark, sf_dir)
     out = None
     for batch, rows in (("A", qrows[:5]), ("B", qrows[5:])):
         top = _ann_cell_topk(
@@ -1799,6 +1800,21 @@ def _ann_indexed(e: DataFrame) -> DataFrame:
     )
     return e.select(
         "vec_id", "embedding", cell.alias("bucket"), l2norm(v).alias("nrm")
+    )
+
+
+def _ann_queries(spark: SparkSession, sf_dir: str) -> list:
+    """The ten ANN query rows (``vec_id``, ``bucket``), lowest ``vec_id``
+    first. Shared by sim_ann_repartitioned, sim_ann_incremental and
+    streaming_ann_probe. They come from the embeddings table through
+    :func:`_ann_indexed`, the same cells the index holds, so picking
+    them reads no bucket file: only the probes do, each its own cells'."""
+    return (
+        _ann_indexed(_emb(spark, sf_dir))
+        .select("vec_id", "bucket")
+        .orderBy("vec_id")
+        .limit(10)
+        .collect()
     )
 
 
@@ -3560,7 +3576,7 @@ def sim_ann_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # untouched (the incremental-ingest contract)
     index.append(indexed.filter(F.col("vec_id") % 10 == 0))
     idx = index.probe()
-    qrows = idx.orderBy("vec_id").limit(10).select("vec_id", "bucket").collect()
+    qrows = _ann_queries(spark, sf_dir)
     out = _ann_cell_topk(
         index, idx, qrows, "sim_ann_incremental after the delta append"
     ).selectExpr(
@@ -4314,10 +4330,7 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     t0 = time.time()
     index = _ann_index_ensure(spark, sf_dir)
     idx = index.probe()
-    qrows = sorted(
-        idx.orderBy("vec_id").limit(10).select("vec_id", "bucket").collect(),
-        key=lambda r: r["vec_id"],
-    )
+    qrows = _ann_queries(spark, sf_dir)
     root = scratch_dir("ann_probe_stream")
     landing, ckpt = f"{root}/landing", f"{root}/ckpt"
     out = f"{root}/result"

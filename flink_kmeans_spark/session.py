@@ -13,14 +13,16 @@ confs every operator relies on:
 - AQE on — runtime coalescing / skew-join handling; at 100 TB this is
   what turns a mis-sized shuffle into a survivable one.
 
+Both paths cross the Python boundary the same way: workers run the
+stock ``pyspark.daemon``, and every function the engine hands to a
+worker starts with :func:`boundary.install`, which stops the worker's
+later tasks from re-reading ``pyspark.zip``.
+
 :func:`get_spark` also sets static confs, which only take effect when a
-SparkContext starts: among them the Python worker daemon
-(:mod:`flink_kmeans_spark.worker_daemon`). ``ensure_conf`` cannot apply
-those to the driver's already-running session, so its Python workers
-run the stock ``pyspark.daemon``. It likewise turns off PySpark's
-per-Column call-site capture, which ``ensure_conf`` leaves as the
-driver's session has it: PySpark reads that flag once per process, and
-it belongs to the caller.
+SparkContext starts. Among them it turns off PySpark's per-Column
+call-site capture, which ``ensure_conf`` leaves as the driver's session
+has it: PySpark reads that flag once per process, and it belongs to the
+caller.
 """
 
 from __future__ import annotations
@@ -134,11 +136,6 @@ def get_spark(app_name: str = "flink-kmeans-spark", shuffle_partitions: int | No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python workers fork from our daemon, which stops each task from
-        # re-reading pyspark.zip (see worker_daemon); the package's parent
-        # dir on the workers' path lets the daemon import from any cwd
-        .config("spark.python.daemon.module", "flink_kmeans_spark.worker_daemon")
-        .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
         # no Python call-site capture per Column op: with it on, each
         # F.col / Column method walks the stack and makes ~5 extra Py4J
         # round trips (and imports IPython once). PySpark reads this flag

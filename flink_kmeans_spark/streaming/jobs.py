@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
+from ..boundary import install
 from ..session import PHASE_WALLS, conf_scope, ensure_conf, scratch_dir
 
 
@@ -169,6 +170,7 @@ def streaming_user_counter_stateful(spark: SparkSession, sf_dir: str) -> DataFra
     ev = stream_events(spark, sf_dir).withWatermark("ts", "1 hour")
 
     def update(key, pdfs, state: GroupState):
+        install()
         import pandas as pd
 
         n, total = state.get if state.exists else (0, 0.0)
@@ -621,6 +623,7 @@ def streaming_user_counter_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             self._agg = handle.getValueState("agg", "n long, total double")
 
         def handleInputRows(self, key, rows, timerValues):
+            install()
             import pandas as pd
 
             n, total = self._agg.get() if self._agg.exists() else (0, 0.0)

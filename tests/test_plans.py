@@ -3,6 +3,7 @@ correct — they must be the plans we'd want at 100 TB. These tests pin
 the load-bearing properties so a refactor can't silently regress them.
 """
 
+import ast
 import re
 
 import pytest
@@ -796,4 +797,127 @@ def test_streaming_drains_and_conf_scopes_have_one_owner():
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if owned.search(line)
     ]
+    assert offenders == []
+
+
+# worker-side entry points: a call's function argument, a processor's
+# per-batch method, a decorated UDF/UDTF, a data source reader's read
+_WORKER_CALLS = {
+    "mapInPandas", "mapInArrow", "applyInPandas", "applyInArrow",
+    "applyInPandasWithState", "transformWithStateInPandas",
+    "foreachPartition", "udf", "pandas_udf",
+}
+_WORKER_DECORATORS = {"udf", "pandas_udf", "udtf"}
+_READER_BASES = {
+    "DataSourceReader", "DataSourceStreamReader", "SimpleDataSourceStreamReader",
+}
+
+
+def _name_of(node):
+    """``f`` for ``f``, ``F.f``, ``f(...)`` and ``F.f(...)``, else None."""
+    if isinstance(node, ast.Call):
+        node = node.func
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.Name):
+        return node.id
+    return None
+
+
+def _worker_functions(tree):
+    """(site line, the function a Python worker runs or None if the
+    site's argument does not resolve to a def) for every worker-side
+    entry point in ``tree``."""
+
+    def method(cls, name):
+        return next(
+            (s for s in cls.body if isinstance(s, ast.FunctionDef) and s.name == name),
+            None,
+        )
+
+    def resolve(scope, arg):
+        if isinstance(arg, ast.Call):  # a processor instance: UserCounter()
+            arg = arg.func
+        if not isinstance(arg, ast.Name):
+            return None
+        for node in ast.walk(scope):  # breadth-first: the nearest def wins
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)) and node.name == arg.id:
+                return method(node, "handleInputRows") if isinstance(node, ast.ClassDef) else node
+        return None
+
+    def visit(scope, node):
+        for child in ast.iter_child_nodes(node):
+            inner = child if isinstance(child, ast.FunctionDef) else scope
+            if isinstance(child, ast.Call) and _name_of(child) in _WORKER_CALLS:
+                arg = child.args[0] if child.args else next(
+                    (k.value for k in child.keywords if k.arg in ("func", "f", "statefulProcessor")),
+                    None,
+                )
+                # udf/pandas_udf with only a return type is a decorator
+                if _name_of(child) not in ("udf", "pandas_udf") or isinstance(arg, (ast.Name, ast.Lambda)):
+                    yield child.lineno, resolve(scope, arg)
+            if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
+                decorators = {_name_of(d) for d in child.decorator_list}
+                if decorators & _WORKER_DECORATORS:
+                    fn = method(child, "eval") if isinstance(child, ast.ClassDef) else child
+                    yield child.lineno, fn
+                if isinstance(child, ast.ClassDef) and {_name_of(b) for b in child.bases} & _READER_BASES:
+                    yield child.lineno, method(child, "read")
+            yield from visit(inner, child)
+
+    yield from visit(tree, tree)
+
+
+def _starts_with_install(fn) -> bool:
+    body = fn.body
+    if isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+        body = body[1:]  # the docstring
+    first = body[0].value if body and isinstance(body[0], ast.Expr) else None
+    return (
+        isinstance(first, ast.Call)
+        and isinstance(first.func, ast.Name)
+        and first.func.id == "install"
+        and not first.args
+    )
+
+
+def test_python_boundary_has_one_owner():
+    """boundary.py is the one Python-boundary mechanism: no module sets a
+    worker daemon or a worker environment, only boundary.py touches
+    zipimport, and every function handed to a Python worker starts with
+    boundary's ``install()`` (imported from boundary, not redefined)."""
+    import pathlib
+
+    import flink_kmeans_spark
+
+    pkg = pathlib.Path(flink_kmeans_spark.__file__).parent
+    owned = re.compile(r"spark\.python\.daemon\.module|spark\.executorEnv|zipimport")
+    offenders = []
+    sites = 0
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg)
+        text = path.read_text()
+        if path != pkg / "boundary.py":
+            offenders += [
+                f"{rel}:{n}"
+                for n, line in enumerate(text.splitlines(), 1)
+                if owned.search(line)
+            ]
+        tree = ast.parse(text)
+        found = list(_worker_functions(tree))
+        sites += len(found)
+        offenders += [
+            f"{rel}:{line} does not start with install()"
+            for line, fn in found
+            if fn is None or not _starts_with_install(fn)
+        ]
+        imports_install = any(
+            isinstance(s, ast.ImportFrom)
+            and (s.module or "").split(".")[-1] == "boundary"
+            and any(a.name == "install" and a.asname is None for a in s.names)
+            for s in ast.walk(tree)
+        )
+        if found and not imports_install:
+            offenders.append(f"{rel}: install is not imported from boundary")
+    assert sites >= 35
     assert offenders == []
