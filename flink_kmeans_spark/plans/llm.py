@@ -1770,11 +1770,13 @@ def sim_ann_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the production ANN serving shape at 100 TB: index cost is
     paid at ingest, every query batch touches only its cells' files,
-    and the only exchange after the scan moves candidate rows for the
-    per-query top-k (WindowGroupLimit prunes to k per partition before
-    the shuffle). The sign-grid cell is engine-portable, so the WHOLE
-    pipeline — cells, candidate sets, ranks — is SQL-oracled, unlike
-    recall-bounded random-hyperplane LSH (sim_lsh_topk)."""
+    and the only exchange is the broadcast of the queries: candidate
+    rows are never shuffled, because the per-query top-k window is
+    partitioned by (cell, query) and the bucketed scan is already
+    hash-partitioned on the cell. The sign-grid cell is
+    engine-portable, so the WHOLE pipeline — cells, candidate sets,
+    ranks — is SQL-oracled, unlike recall-bounded random-hyperplane
+    LSH (sim_lsh_topk)."""
     index = _ann_index_ensure(spark, sf_dir)
     idx = index.probe()
     qrows = _ann_queries(spark, sf_dir)
@@ -1790,16 +1792,20 @@ def sim_ann_repartitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ann_indexed(e: DataFrame) -> DataFrame:
     """Embeddings with their sign-grid cell (bit i = embedding[i] > 0
     over the first 8 dims) as ``bucket`` and their L2 norm as ``nrm``:
-    the rows of every ANN index."""
-    from ..functions.vectors import l2norm
-
-    v = F.col("embedding").cast("array<double>")
-    cell = sum(
-        (F.when(v.getItem(i) > 0, F.lit(1 << i)).otherwise(F.lit(0)))
-        for i in range(8)
+    the rows of every ANN index. One SQL projection, parsed once on the
+    JVM side; the same expressions built from Column objects cost a
+    Py4J round trip per node. ``nrm`` is ``functions.vectors.l2norm``'s
+    expression, so both forms give bit-identical norms."""
+    v = "CAST(embedding AS array<double>)"
+    cell = " + ".join(
+        f"CASE WHEN {v}[{i}] > 0 THEN {1 << i} ELSE 0 END" for i in range(8)
     )
-    return e.select(
-        "vec_id", "embedding", cell.alias("bucket"), l2norm(v).alias("nrm")
+    return e.selectExpr(
+        "vec_id",
+        "embedding",
+        f"{cell} AS bucket",
+        f"sqrt(aggregate(zip_with({v}, {v}, (x, y) -> x * y), 0D,"
+        " (acc, x) -> acc + x)) AS nrm",
     )
 
 
@@ -1847,9 +1853,14 @@ def _ann_cell_topk(
     Both join sides read the literal ``bucket IN (<cells>)`` candidates
     of ``idx`` (the queries are index rows, so they are among them),
     and ``index.pruned`` checks that every scan of the returned frame
-    is bucket-pruned, naming ``who`` if one is not. Each step is SQL
-    text, parsed once on the JVM side: built from Column objects, the
-    same plan costs a Py4J round trip per expression node."""
+    is bucket-pruned, naming ``who`` if one is not. The rank window is
+    partitioned by ``(q_bucket, q_id)``: a query's id fixes its cell,
+    so the ranks are those of a ``q_id`` window, and the broadcast
+    join's output, hash-partitioned on the bucketed scan's ``bucket``
+    (equal to ``q_bucket``), already satisfies it, so the frame has no
+    shuffle exchange. Each step is SQL text, parsed once on the JVM
+    side: built from Column objects, the same plan costs a Py4J round
+    trip per expression node."""
     cells = ", ".join(str(c) for c in sorted({r["bucket"] for r in rows}))
     ids = ", ".join(str(r["vec_id"]) for r in rows)
     cand = idx.where(f"bucket IN ({cells})")
@@ -1862,6 +1873,7 @@ def _ann_cell_topk(
     top = (
         cand.join(F.broadcast(q), F.expr("bucket = q_bucket AND vec_id <> q_id"))
         .selectExpr(
+            "q_bucket",
             "q_id",
             "vec_id AS n_id",
             "aggregate(zip_with(q_vec, CAST(embedding AS array<double>),"
@@ -1872,7 +1884,8 @@ def _ann_cell_topk(
             "q_id",
             "n_id",
             "cosine",
-            "row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS rk",
+            "row_number() OVER (PARTITION BY q_bucket, q_id"
+            " ORDER BY cosine DESC, n_id) AS rk",
         )
         .where(f"rk <= {k}")
         .selectExpr("q_id", "n_id", "cosine", "CAST(rk AS int) AS rk")
@@ -4306,9 +4319,12 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal ``bucket IN (...)`` — BUCKET PRUNING of every scan is
     asserted per batch (``BucketedIndex.pruned``; a regression to a
     full scan raises mid-stream) — broadcast the queries, read from
-    the same pruned candidates, for exact in-cell cosine top-3, and
-    stage the batch's results to a per-batch_id parquet dir
-    (idempotent under foreachBatch's at-least-once retries). The DuckDB oracle is the BATCH answer over
+    the same pruned candidates, for exact in-cell cosine top-3, then
+    collect the batch's top-3 (bounded: ≤ 15 rows, through the plan
+    the guard already built) and land it as JSON lines in
+    ``batch=<id>/part.json`` (:func:`_land_json`; idempotent under
+    foreachBatch's at-least-once retries). The result is read back
+    with its known schema. The DuckDB oracle is the BATCH answer over
     the full corpus, so a hash match proves stream-serving ≡ batch.
 
     Scale shape at 100 TB: the index is paid once at ingest (shared
@@ -4354,13 +4370,43 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = batch_df.collect()  # ≤ 5 queries per arriving batch
         if not rows:
             return
-        _ann_cell_topk(
+        # ≤ k·|batch| rows: collecting runs the plan the pruning guard
+        # already built, and landing them costs no write job
+        top = _ann_cell_topk(
             index, idx, rows, f"streaming_ann_probe micro-batch {batch_id}"
-        ).write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
+        ).collect()
+        _land_json(f"{out}/batch={batch_id}", top)
 
     stream = arrivals(idx.sparkSession, "vec_id long, bucket int", landing)
     drain(stream.writeStream.foreachBatch(probe), ckpt, "streaming_ann_probe", t0)
-    return spark.read.option("recursiveFileLookup", "true").parquet(out)
+    return (
+        spark.read.schema("q_id long, n_id long, cosine double, rk int")
+        .option("recursiveFileLookup", "true")
+        .json(out)
+    )
+
+
+def _land_json(batch_dir: str, rows: list) -> None:
+    """Write ``rows`` as JSON lines to ``batch_dir/part.json``, replacing
+    any earlier attempt of the same batch (foreachBatch retries are
+    at-least-once). The rows go to a temp file first and are renamed
+    into place, so a reader never sees a partial file; Python's float
+    repr round-trips every double, so no bit of ``cosine`` is lost.
+
+    The stdlib writes them on purpose: each streaming query runs its
+    callback on a new Py4J thread that never exits, and pyarrow's
+    per-thread allocator grew driver RSS without bound there."""
+    import json
+    import os
+    import tempfile
+
+    os.makedirs(batch_dir, exist_ok=True)
+    # a leading "." hides a leftover temp file from Spark's file reader
+    fd, tmp = tempfile.mkstemp(dir=batch_dir, prefix=".part-", suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
+        for r in rows:
+            f.write(json.dumps(r.asDict()) + "\n")
+    os.replace(tmp, os.path.join(batch_dir, "part.json"))
 
 
 # -------------------------------------------- r8.5: substring-span dedup

@@ -970,21 +970,37 @@ def test_dedup_minhash_incremental_mechanics(spark, sf_dir):
 
 def test_streaming_ann_probe_micro_batches(spark, sf_dir):
     """The stream must drain in TWO micro-batches (one per query file)
-    each staging its own batch=N dir, and the merged result must equal
-    the batch probe semantics: top-3 per query, per-batch bucket
-    pruning asserted inside the callable itself."""
-    import glob
+    each landing its rows as exactly one batch=N/part.json (no leftover
+    temp file), and the merged result must equal the batch probe:
+    sim_ann_repartitioned's rows without its batch tag, with bit-equal
+    cosines (the JSON sink loses no bits), top-3 per query, per-batch
+    bucket pruning asserted inside the callable itself."""
     import os
 
     df = specs()["streaming_ann_probe"].fn(spark, sf_dir)
+    assert df.schema.simpleString() == (
+        "struct<q_id:bigint,n_id:bigint,cosine:double,rk:int>"
+    )
     rows = df.collect()
-    # the staged sink: one batch dir per micro-batch
+    # the landed sink: one batch dir per micro-batch, one file in each
     src = df.inputFiles()[0].removeprefix("file://")
     result_root = src[: src.index("/batch=")]
-    batch_dirs = sorted(
-        os.path.basename(p) for p in glob.glob(f"{result_root}/batch=*")
-    )
+    batch_dirs = sorted(os.listdir(result_root))
     assert batch_dirs == ["batch=0", "batch=1"]
+    for b in batch_dirs:
+        assert os.listdir(os.path.join(result_root, b)) == ["part.json"], b
+    cols = ["q_id", "n_id", "cosine", "rk"]
+    got = df.toPandas()[cols].sort_values(["q_id", "rk"])
+    want = (
+        specs()["sim_ann_repartitioned"].fn(spark, sf_dir)
+        .drop("batch").toPandas()[cols].sort_values(["q_id", "rk"])
+    )
+    for c in ("q_id", "n_id", "rk"):
+        assert np.array_equal(got[c].to_numpy(), want[c].to_numpy()), c
+    assert np.array_equal(
+        got["cosine"].to_numpy().view(np.int64),
+        want["cosine"].to_numpy().view(np.int64),
+    )
     assert all(r["rk"] in (1, 2, 3) for r in rows)
     by_q = {}
     for r in rows:
@@ -999,6 +1015,35 @@ def test_streaming_ann_probe_micro_batches(spark, sf_dir):
     assert set(by_q) <= first10
     for q, rks in by_q.items():
         assert sorted(rks) == list(range(1, len(rks) + 1))
+
+
+def test_ann_indexed_projection_matches_the_column_form(spark, emb):
+    """_ann_indexed's one SQL projection gives the same cell and
+    bit-identical norms as the Column-built expressions
+    (functions.vectors.l2norm and a sum of per-dimension whens)."""
+    import flink_kmeans_spark.plans.llm as L
+    from flink_kmeans_spark.functions.vectors import l2norm
+
+    v = F.col("embedding").cast("array<double>")
+    cell = sum(
+        (F.when(v.getItem(i) > 0, F.lit(1 << i)).otherwise(F.lit(0)))
+        for i in range(8)
+    )
+    columns = emb.select(
+        "vec_id", "embedding", cell.alias("bucket"), l2norm(v).alias("nrm")
+    )
+    sql = L._ann_indexed(emb)
+    assert [(f.name, f.dataType) for f in sql.schema] == [
+        (f.name, f.dataType) for f in columns.schema
+    ]
+    want = columns.drop("embedding").toPandas().sort_values("vec_id")
+    got = sql.drop("embedding").toPandas().sort_values("vec_id")
+    assert np.array_equal(got["vec_id"].to_numpy(), want["vec_id"].to_numpy())
+    assert np.array_equal(got["bucket"].to_numpy(), want["bucket"].to_numpy())
+    assert got["bucket"].nunique() > 8
+    assert np.array_equal(
+        got["nrm"].to_numpy().view(np.int64), want["nrm"].to_numpy().view(np.int64)
+    )
 
 
 def test_dedup_substring_span_mechanics(spark, tmp_path):

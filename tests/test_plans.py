@@ -773,6 +773,30 @@ def test_bucket_pruning_guard_compares_selected_buckets(spark):
             index.pruned(frame, who)
 
 
+def test_ann_cell_topk_ranks_without_a_shuffle(spark, sf_dir):
+    """The ANN probe's per-query top-k window partitions by
+    (q_bucket, q_id): a query's id fixes its cell, and the broadcast
+    join's output is already hash-partitioned on the bucketed scan's
+    cell, so the broadcast of the queries is the plan's only exchange.
+    Both index scans stay bucket-pruned."""
+    import flink_kmeans_spark.plans.llm as L
+
+    index = L._ann_index_ensure(spark, sf_dir)
+    rows = L._ann_queries(spark, sf_dir)[:5]
+    top = L._ann_cell_topk(index, index.probe(), rows, "plan test")
+    plan = plan_of(top)
+    exchanges = re.findall(r"(\w*Exchange) ", plan)
+    assert "BroadcastExchange" in exchanges, plan
+    assert set(exchanges) == {"BroadcastExchange"}, plan
+    assert "Window " in plan, plan
+    scans = [
+        ln for ln in plan.splitlines()
+        if "FileScan" in ln and f".{index.name}[" in ln.lower()
+    ]
+    assert len(scans) == 2, plan
+    assert index.pruned(top, "plan test") is top
+
+
 def test_streaming_drains_and_conf_scopes_have_one_owner():
     """Only streaming/jobs.py may start, wait on or time a drain, or
     build the ordered landing reader; only session.py may unset a conf.
