@@ -28,41 +28,7 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 
 from ..session import index_dir, scratch_dir
-
-
-def _data_fingerprint(spark: SparkSession, path: str) -> list:
-    """Per-file ``name:length:modificationTime`` fingerprint of a data
-    path, resolved through the Hadoop FileSystem API so it works on any
-    scheme the session can read (s3a://, hdfs://, file:); ``os.stat``
-    would see nothing off the local filesystem and never notice a
-    rewrite. Local os.stat fallback only if the JVM call is unavailable."""
-    try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return []
-        st = fs.getFileStatus(jpath)
-        if st.isDirectory():
-            parts = []
-            for s in fs.listStatus(jpath):
-                parts.append(
-                    f"{s.getPath().getName()}:{s.getLen()}:{s.getModificationTime()}"
-                )
-            return sorted(parts)
-        return [f"{st.getLen()}:{st.getModificationTime()}"]
-    except Exception:
-        pass
-    local = path.removeprefix("file:")
-    if os.path.isdir(local):
-        return sorted(
-            f"{name}:{os.stat(os.path.join(local, name)).st_size}:"
-            f"{os.stat(os.path.join(local, name)).st_mtime_ns}"
-            for name in os.listdir(local)
-        )
-    if os.path.exists(local):
-        st = os.stat(local)
-        return [f"{st.st_size}:{st.st_mtime_ns}"]
-    return []
+from ..sources.tables import _data_fingerprint
 
 
 # a bucketed FileScan's metadata: "SelectedBucketsCount: 3 out of 16"
@@ -104,7 +70,8 @@ class BucketedIndex:
         """The warm table over the data at ``source``, in ``index_dir``,
         named ``<prefix>_<path tag>_<fingerprint tag>``."""
         family = f"{prefix}_{_md8(source)}_"
-        name = family + _md8("|".join(_data_fingerprint(spark, source)))
+        fingerprint, _ = _data_fingerprint(spark, source)
+        name = family + _md8("|".join(fingerprint))
         return cls(spark, name, index_dir(name), n, key, family=family)
 
     @classmethod

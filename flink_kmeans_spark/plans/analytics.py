@@ -29,7 +29,7 @@ from pyspark.sql.window import Window
 
 from ..boundary import install
 from ..operators.bucketed import BucketedIndex
-from ..sources import load_table
+from ..sources import load_table, table_path
 from .registry import register
 
 
@@ -377,11 +377,9 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     hence the plain-SQL oracle. Each bucketed copy is built once per
     data fingerprint of its source file, so a rewritten source is
     re-bucketed instead of answered from the stale copy."""
-    import os
-
     o, l = (
         BucketedIndex.build_once(
-            spark, f"{name}_b", os.path.join(sf_dir, f"{name}.parquet"), 8, key
+            spark, f"{name}_b", table_path(sf_dir, name), 8, key
         ).ensure(lambda: _t(spark, sf_dir, name).select(*cols))
         for name, key, cols in (
             ("orders", "o_orderkey", ("o_orderkey", "o_orderpriority")),

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import load_table
+from ..sources import load_table, stream_table
 from .registry import register
 
 
@@ -459,7 +459,7 @@ def streaming_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign EXACTLY (same oracle as kmeans_assign); the centroid block
     rides in as the same one-row broadcast the batch path uses."""
     from ..operators import kmeans as km
-    from ..streaming.jobs import run_available_now, stream_table
+    from ..streaming.jobs import run_available_now
 
     static = load_table(spark, sf_dir, "embeddings")
     cents = km.init_centroids(static, 10)

@@ -17,7 +17,7 @@ from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..operators import udfs as U
 from ..operators.bucketed import BucketedIndex
-from ..sources import load_table, spread_scan
+from ..sources import load_table, spread_scan, table_path
 from .registry import register
 
 _SW_SQL = "['the','a','of','and','is','to','in','for','on','with']"
@@ -1830,15 +1830,12 @@ def _ann_index_ensure(spark: SparkSession, sf_dir: str) -> BucketedIndex:
     and streaming_ann_probe (the online-serving twin).
 
     The table is named by the path and data fingerprint (per-file size
-    and mtime) of embeddings.parquet, so regenerating the data in place
-    forces a rebuild instead of reusing a stale index. Reuse happens
-    only within one process: ``get_spark`` sessions keep their catalog
-    in memory, so a new process rebuilds the table."""
-    import os
-
+    and mtime) of the embeddings table, so regenerating the data in
+    place forces a rebuild instead of reusing a stale index. Reuse
+    happens only within one process: ``get_spark`` sessions keep their
+    catalog in memory, so a new process rebuilds the table."""
     return BucketedIndex.build_once(
-        spark, "ann_index", os.path.join(sf_dir, "embeddings.parquet"),
-        16, "bucket",
+        spark, "ann_index", table_path(sf_dir, "embeddings"), 16, "bucket"
     ).ensure(lambda: _ann_indexed(_emb(spark, sf_dir)))
 
 

@@ -113,21 +113,15 @@ def overlap(*thunks):
         return [f.result() for f in futures]
 
 
-def get_spark(app_name: str = "flink-kmeans-spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "flink-kmeans-spark") -> SparkSession:
     """Build the local session used by tests and bench.
 
-    ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``). Shuffle
-    partitions default to the core count — sized for the local bench;
-    a real cluster deployment would size this to data volume
-    (~128 MB-per-partition rule) and lean on AQE coalescing.
+    ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``) with 8 shuffle
+    partitions: a small fixed count plus AQE coalescing, sized for the
+    local bench. A cluster deployment sizes this to data volume
+    (~128 MB per partition) instead.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        # local-bench sizing (BASELINE.md methodology used 8): small fixed
-        # count + AQE coalescing. A cluster deployment sizes this to data
-        # volume (~128 MB per partition) instead.
-        env = os.environ.get("SPARK_GRAFT_SHUFFLE")
-        shuffle_partitions = int(env) if env else 8
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -144,8 +138,8 @@ def get_spark(app_name: str = "flink-kmeans-spark", shuffle_partitions: int | No
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    # explicit bench sizing wins over the RUNTIME_CONFS default
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    # the local-bench sizing wins over the RUNTIME_CONFS default
+    builder = builder.config("spark.sql.shuffle.partitions", "8")
     return builder.getOrCreate()
 
 

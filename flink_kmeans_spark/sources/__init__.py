@@ -1,1 +1,8 @@
-from .tables import TABLES, load_table, register_views, spread_scan  # noqa: F401
+from .tables import (  # noqa: F401
+    TABLES,
+    load_table,
+    register_views,
+    spread_scan,
+    stream_table,
+    table_path,
+)

@@ -1,4 +1,4 @@
-"""Schema-checked readers for the ten driver-generated test tables.
+"""The one reader for the ten driver-generated test tables.
 
 Reference parity: the reference's sources are Flink
 ``readCsvFile(...).fieldDelimiter(" ")`` point/centroid readers and an
@@ -8,15 +8,25 @@ Parquet (columnar scan + predicate pushdown + column pruning are free);
 a whitespace-CSV reader is kept in :func:`read_points_csv` for parity
 with the reference CLI surface.
 
+Every read of a table, batch (:func:`load_table`) or streaming
+(:func:`stream_table`), goes through this module, which owns the
+table's path, its layout (one file or a directory of part files), its
+raw parquet schema and ``ensure_conf``. The raw schema is inferred once
+per data fingerprint and every later read is planned with it, so a warm
+read launches no schema-inference job.
+
 The one piece of genuine normalization lives here, NOT in every
-operator: ``events.ts`` is Parquet TIMESTAMP(NANOS), which Spark 4 only
-reads with ``spark.sql.legacy.parquet.nanosAsLong=true`` (as int64
-nanoseconds). :func:`load_table` converts it to a µs TimestampType with
-integer division (``ts div 1000`` — float division would lose precision
-on ~1.7e18 ns epoch values), matching DuckDB's native ns→µs truncation.
+operator: ``events.ts`` is Parquet TIMESTAMP(NANOS) in some testdata
+generations, which Spark 4 only reads with
+``spark.sql.legacy.parquet.nanosAsLong=true`` (as int64 nanoseconds).
+Both readers convert it to a µs TimestampType with integer division
+(``ts div 1000`` — float division would lose precision on ~1.7e18 ns
+epoch values), matching DuckDB's native ns→µs truncation.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,9 +62,9 @@ CENTROID_CSV_SCHEMA = T.StructType(
 
 
 def spread_scan(df: DataFrame, key: str) -> DataFrame:
-    """Parallelize the map stage after an unsplittable scan (r11; guide
-    §2.5: "one huge unsplittable file … repartition immediately after
-    the read").
+    """Parallelize the map stage after an unsplittable scan (guide §2.5:
+    "one huge unsplittable file … repartition immediately after the
+    read").
 
     A single-row-group parquet file yields a ONE-TASK scan, so every
     map-side expression before the first Exchange (shingling, per-token
@@ -85,15 +95,97 @@ def spread_scan(df: DataFrame, key: str) -> DataFrame:
     return df.repartition(target, F.col(key))
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test table; events gets the ns-timestamp normalization."""
+def table_path(sf_dir: str, name: str) -> str:
+    """Where table ``name`` lives under ``sf_dir``: ``<name>.parquet``,
+    either one file or a directory of part files."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    return f"{sf_dir}/{name}.parquet"
+
+
+def _data_fingerprint(spark: SparkSession, path: str) -> tuple[list, bool]:
+    """``(fingerprint, is_dir)`` of a data path: one file-status lookup
+    tells both whether it changed and whether it is a directory. The
+    fingerprint is ``length:modificationTime`` for a file and the
+    sorted ``name:length:modificationTime`` of its entries for a
+    directory, so an in-place rewrite changes it; it is empty when the
+    path is missing. Resolved through the Hadoop FileSystem API so it
+    works on any scheme the session can read (s3a://, hdfs://, file:),
+    where ``os.stat`` would see nothing off the local filesystem; the
+    local os.stat fallback runs only if the JVM call is unavailable."""
+    try:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not fs.exists(jpath):
+            return [], False
+        st = fs.getFileStatus(jpath)
+        if st.isDirectory():
+            parts = [
+                f"{s.getPath().getName()}:{s.getLen()}:{s.getModificationTime()}"
+                for s in fs.listStatus(jpath)
+            ]
+            return sorted(parts), True
+        return [f"{st.getLen()}:{st.getModificationTime()}"], False
+    except Exception:
+        pass
+    local = path.removeprefix("file:")
+    if os.path.isdir(local):
+        return sorted(
+            f"{name}:{os.stat(os.path.join(local, name)).st_size}:"
+            f"{os.stat(os.path.join(local, name)).st_mtime_ns}"
+            for name in os.listdir(local)
+        ), True
+    if os.path.exists(local):
+        st = os.stat(local)
+        return [f"{st.st_size}:{st.st_mtime_ns}"], False
+    return [], False
+
+
+# Raw parquet schema per (table path, fingerprint). Inferring a schema
+# launches a Spark job on every read; a read planned with a known
+# schema launches none. A rewritten table has a new fingerprint, so its
+# schema is inferred again.
+_RAW_SCHEMAS: dict = {}
+
+
+def _raw_table(spark: SparkSession, sf_dir: str, name: str) -> tuple:
+    """``(path, raw schema, is_dir)`` of table ``name``, after
+    ``ensure_conf`` (the raw schema of ``events.ts`` depends on it)."""
     ensure_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        df = _normalize_event_ts(df)
-    return df
+    path = table_path(sf_dir, name)
+    fingerprint, is_dir = _data_fingerprint(spark, path)
+    key = (path, tuple(fingerprint))
+    raw = _RAW_SCHEMAS.get(key)
+    if raw is None:
+        raw = _RAW_SCHEMAS[key] = spark.read.parquet(path).schema
+    return path, raw, is_dir
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one test table; events gets the ns-timestamp normalization."""
+    path, raw, _ = _raw_table(spark, sf_dir, name)
+    df = spark.read.schema(raw).parquet(path)
+    return _normalize_event_ts(df) if name == "events" else df
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over one table, with the batch reader's
+    schema and normalization.
+
+    The file-source basePath must be a directory. A one-file table is
+    selected out of ``sf_dir`` with a leaf glob; a directory table is
+    streamed from the directory itself, because a leaf-name glob
+    matches none of its part files and the stream would be empty."""
+    path, raw, is_dir = _raw_table(spark, sf_dir, name)
+    if is_dir:
+        df = spark.readStream.schema(raw).parquet(path)
+    else:
+        df = (
+            spark.readStream.schema(raw)
+            .option("pathGlobFilter", os.path.basename(path))
+            .parquet(sf_dir)
+        )
+    return _normalize_event_ts(df) if name == "events" else df
 
 
 def _normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -24,54 +24,13 @@ from pyspark.sql.types import StructType
 
 from ..boundary import install
 from ..session import PHASE_WALLS, conf_scope, ensure_conf, scratch_dir
-
-
-def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """File-source stream over one parquet table, layout-agnostic.
-
-    The file-source basePath must be a DIRECTORY, and two table
-    layouts exist: driver testdata ships ONE FILE named
-    ``<name>.parquet`` (select it out of the landing dir with a leaf
-    glob), while replicas / production lakes ship a DIRECTORY
-    ``<name>.parquet/`` of part files — there the stream reads the
-    dir itself, because a leaf-name glob matches NO part file and the
-    source silently streams EMPTY (caught by the r6 scale probe:
-    streaming_session_window returned 0 rows on the 10× replica).
-    File streams require an explicit schema — taken from a static
-    read.
-
-    Layout detection goes through the Hadoop FileSystem API so it
-    works for ANY scheme the session can read (s3a://, hdfs://, …) —
-    ``os.path.isdir`` is always False off the local filesystem, which
-    would route object-store directory tables into the glob branch and
-    silently stream zero rows (ADVICE r6). Local-path fallback only if
-    the JVM call is unavailable."""
-    schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
-    p = f"{sf_dir}/{name}.parquet"
-    try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(p)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        is_dir = fs.exists(jpath) and fs.getFileStatus(jpath).isDirectory()
-    except Exception:
-        is_dir = os.path.isdir(p.removeprefix("file:"))
-    if is_dir:
-        return spark.readStream.schema(schema).parquet(p)
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", f"{name}.parquet")
-        .parquet(sf_dir)
-    )
+from ..sources import load_table, stream_table
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet, with the same
-    ns-timestamp normalization as the batch reader (sources/tables.py).
-    File streams require an explicit schema — taken from a static read."""
-    ensure_conf(spark)
-    raw = stream_table(spark, sf_dir, "events")
-    from ..sources.tables import _normalize_event_ts
-
-    return _normalize_event_ts(raw)
+    """File-source stream over the events table, normalized like the
+    batch reader."""
+    return stream_table(spark, sf_dir, "events")
 
 
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,8 +157,6 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     per micro-batch; no streaming state is needed for the join itself
     (unlike stream-stream joins, which buffer within the watermark).
     The demo key maps user_id into the 25-row nation dim."""
-    from ..sources import load_table
-
     ev = stream_events(spark, sf_dir)
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
@@ -524,13 +481,11 @@ def run_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     reprocessing nothing, missing nothing — so the sink holds every
     event exactly once (the crash/restart guarantee a 100 TB ingestion
     pipeline leans on; identity oracle over the source proves it)."""
-    from ..sources.tables import _normalize_event_ts
-
     root = scratch_dir("ckpt_resume")
     landing, ckpt, sink = f"{root}/landing", f"{root}/ckpt", f"{root}/sink"
     os.makedirs(landing)
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     # two disjoint, exhaustive arrivals built in one corpus pass; each
     # waits in a stage dir until the drain before it has completed, so
     # drain 0 cannot see arrival 1 — the os-level move is how a real
@@ -547,9 +502,8 @@ def run_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     for path in staged:
         name = os.path.basename(path)
         os.replace(path, os.path.join(landing, name))
-        stream = _normalize_event_ts(arrivals(spark, ev.schema, landing))
         drain(
-            stream.writeStream.format("parquet")
+            arrivals(spark, ev.schema, landing).writeStream.format("parquet")
             .option("path", sink)
             .outputMode("append"),
             ckpt,
@@ -557,19 +511,6 @@ def run_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return spark.read.parquet(sink).select(
         "event_id", "user_id", "event_type", F.round("value", 4).alias("value")
-    )
-
-
-def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents parquet (same glob-select
-    pattern as stream_events) — the landing-directory shape for an
-    incremental media-ingest pipeline."""
-    ensure_conf(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
     )
 
 
@@ -581,7 +522,7 @@ def streaming_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     media ingest is a source swap, not a rewrite."""
     from ..operators.multimodal import decode_image_media, to_image_table
 
-    docs = stream_documents(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     return decode_image_media(to_image_table(docs))
 
 

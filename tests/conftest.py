@@ -20,7 +20,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     from flink_kmeans_spark.session import get_spark
 
-    s = get_spark("pytest", shuffle_partitions=8)
+    s = get_spark("pytest")
     yield s
     s.stop()
 

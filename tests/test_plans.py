@@ -744,6 +744,31 @@ def test_bucketed_tables_have_one_owner():
     assert offenders == []
 
 
+def test_table_reads_have_one_owner():
+    """Only sources/tables.py may build a table's path from sf_dir,
+    normalize events.ts or probe a path's layout; every other module
+    reads a table through load_table, stream_table or table_path."""
+    import pathlib
+
+    import flink_kmeans_spark
+    from flink_kmeans_spark.sources import TABLES
+
+    pkg = pathlib.Path(flink_kmeans_spark.__file__).parent
+    owned = re.compile(
+        rf"(\b({'|'.join(TABLES)})|\{{name\}})\.parquet\b"
+        r"|sf_dir\b.*\.parquet|\.parquet\b.*\bsf_dir"
+        r"|_normalize_event_ts|hadoop\.fs\.Path"
+    )
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "sources" / "tables.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if owned.search(line)
+    ]
+    assert offenders == []
+
+
 def test_bucket_pruning_guard_compares_selected_buckets(spark):
     """BucketedIndex.pruned passes a probe only if every scan of the
     table reads fewer buckets than it has: an unfiltered probe and a
